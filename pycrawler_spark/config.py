@@ -77,11 +77,9 @@ class CrawlConfig:
 
     # -- error codes (config-example.py:63) ------------------------------
     code_response_error: int = -1
-    code_crawler_error: int = -2
     code_robots_blocked: int = -3   # engine addition (no reference analog)
 
     # -- scale knobs ------------------------------------------------------
-    shuffle_partitions: int = 32
     host_buckets: int = 32          # hash-partition count for host-keyed state
     broadcast_wave_max_rows: int = 2_000_000  # broadcast fetch-wave side of the
                                     # corpus join below this size, else shuffle
@@ -93,11 +91,8 @@ class CrawlConfig:
     # never corpus-sized); big waves have law-of-large-numbers balance
     # across thousands of scan partitions and skip the extra exchange.
     udf_balance_max_rows: int = 200_000
-    hot_host_threshold: int = 100_000  # candidates per host above which the
-                                    # link pipeline salts the host key
     salt_buckets: int = 16
     bloom_fpp: float = 0.01
-    bloom_min_items: int = 1024
     # directory-partition fan-out of the persistent seen table
     # (sbucket = task_id mod seen_buckets); politeness sub-waves prune
     # their seen read to the buckets of the tasks they schedule
@@ -122,6 +117,13 @@ class CrawlConfig:
         if not self.politeness:
             return 1 << 30
         return max(1, self.wave_interval_ms // self.per_page_cost_ms)
+
+    @property
+    def use_scheduler(self) -> bool:
+        """Per-host budgets or robots need the wave scheduler, which may
+        split a depth level into several sub-waves; otherwise one
+        atomic wave fetches the whole depth."""
+        return self.politeness or self.obey_robots
 
     def copy(self, **overrides) -> "CrawlConfig":
         from dataclasses import replace

@@ -29,31 +29,64 @@ import json
 import os
 import shutil
 import time
-from typing import Dict, List, Optional
+from concurrent.futures import ThreadPoolExecutor
+from typing import Dict, Iterator, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from pycrawler_spark.config import CrawlConfig
 from pycrawler_spark.functions.udfs import (
+    host_bucket,
     normalize_url_udf,
     page_features_nolinks_udf,
+    page_features_resolve_slim_udf,
     page_features_resolve_udf,
     parse_url_udf,
     refresh_target_udf,
 )
 from pycrawler_spark.operators.links import candidate_links, dedup_budget_kernel
+from pycrawler_spark.operators.requests import derive_requests, instrument_media
 from pycrawler_spark.operators.scheduler import schedule_wave
 from pycrawler_spark.operators.seen import relevant_seen
 from pycrawler_spark.util import empty_df
 
 REDIRECT_T = "array<struct<url:string,code:int,location:string>>"
 
-FETCH_COLS = [
-    "wave_id", "task_id", "url", "url_final", "url_norm", "host", "depth",
-    "repetition", "seq", "code", "method", "content", "extracted_text",
-    "meta_headers", "has_login_form", "has_cookie_banner", "redirect_chain",
-    "body_sha256", "resheaders",
-]
+# the fetches table: column -> type (the typed null an outcome without
+# that column writes, see _fetch_projection)
+FETCH_SCHEMA = {
+    "wave_id": "int", "task_id": "long", "url": "string",
+    "url_final": "string", "url_norm": "string", "host": "string",
+    "depth": "int", "repetition": "int", "seq": "long", "code": "int",
+    "method": "string", "content": "string", "extracted_text": "string",
+    "meta_headers": "array<string>", "has_login_form": "boolean",
+    "has_cookie_banner": "boolean", "redirect_chain": REDIRECT_T,
+    "body_sha256": "string", "resheaders": "string",
+}
+FETCH_COLS = list(FETCH_SCHEMA)
+# page-feature struct fields (pf.*) that land in fetches as-is
+PAGE_FEATURES = ("extracted_text", "meta_headers", "has_login_form",
+                 "has_cookie_banner")
+# one scheduled wave row
+WAVE_COLS = ("task_id", "url", "url_norm", "host", "depth", "seq", "from_url")
+# a schedule stage's result: (wave rows, robots-blocked rows or None,
+# n scheduled, n blocked, cached frames to release after the wave)
+Scheduled = Tuple[DataFrame, Optional[DataFrame], int, int, List[DataFrame]]
+
+
+def _fetch_projection(df: DataFrame, wave_id: int, code: int, **cols) -> DataFrame:
+    """One fetch outcome's rows onto FETCH_SCHEMA (repetition is added
+    after the union): ``cols`` give the outcome's own columns, the wave
+    row supplies task_id / url / url_norm / host / depth / seq, and
+    every other column is a typed null."""
+    cols = {"wave_id": F.lit(wave_id), "code": F.lit(code), **cols}
+    return df.select(*[
+        (cols[name] if name in cols
+         else F.col(name) if name in WAVE_COLS
+         else F.lit(None).cast(typ)).alias(name)
+        for name, typ in FETCH_SCHEMA.items() if name != "repetition"
+    ])
 
 
 class CrawlEngine:
@@ -436,8 +469,9 @@ class CrawlEngine:
     # ----- resume (T3) ------------------------------------------------------
 
     def resume(self) -> None:
-        """Drop any wave directories newer than the last committed wave
-        (interrupted mid-write), then continue from the manifest."""
+        """Drop every table directory the manifest does not commit — a
+        wave interrupted mid-write, or an interrupted compaction's temp
+        snapshot — then continue from the manifest."""
         m = self._load_manifest()
         committed = {w["wave_id"] for w in m["waves"]}
         for table in ("tasks", "frontier", "seen", "fetches", "metrics",
@@ -446,8 +480,9 @@ class CrawlEngine:
             if not os.path.isdir(base):
                 continue
             for d in os.listdir(base):
-                wid = int(d.split("=")[1])
-                if wid not in committed:
+                # a non-wave entry (compact()'s _compact_tmp snapshot)
+                # is never committed either
+                if not d.startswith("wave=") or int(d.split("=")[1]) not in committed:
                     shutil.rmtree(os.path.join(base, d))
         self.pages_path = m["pages_path"]
 
@@ -615,125 +650,80 @@ class CrawlEngine:
             )
         )
 
-    # ----- one wave ---------------------------------------------------------
+    # ----- one wave --------------------------------------------------------
+    # schedule → resolve redirects → fetch + extract → candidates → seen
+    # probe → kernel → commit; _run_wave strings the stages together.
 
-    def _run_wave(self, m: Dict, depth: int) -> Dict:
-        # A failed wave must leave no background writer threads alive:
-        # the wave body forks fetch/frontier/seen/tasks writers onto a
-        # thread pool, and an exception between submit and the success
-        # path's shutdown would otherwise let orphan writers keep
-        # writing wave directories while the manifest-replay retry of
-        # the SAME wave races them on the same paths.
-        pools: List = []
-        try:
-            return self._run_wave_body(m, depth, pools)
-        except BaseException:
-            for pool in pools:
-                pool.shutdown(wait=True, cancel_futures=True)
-            raise
+    def _schedule_atomic(self, m: Dict, depth: int) -> Optional[Scheduled]:
+        """Atomic-depth mode, zero scheduling jobs: the manifest records
+        how many rows each wave inserted at each depth, so the eligible
+        set is exactly the frontier deltas newer than the last fetch
+        wave at this depth (a later seed ingest reopens the depth with
+        only its OWN rows — never refetching the already-crawled ones).
+        One wave fetches the whole depth level."""
+        fetch_ids = [w["wave_id"] for w in m["waves"]
+                     if w.get("kind") == "fetch" and w["depth"] == depth]
+        last_fetch = max(fetch_ids) if fetch_ids else -1
+        n_sched = 0
+        for w in m["waves"]:
+            if w["wave_id"] <= last_fetch:
+                continue
+            if w.get("kind") == "seeds":
+                n_sched += w.get("inserts_by_depth", {}).get(str(depth), 0)
+            elif w.get("kind") == "fetch" and w.get("insert_depth") == depth:
+                n_sched += w.get("n_inserted", 0)
+        if n_sched == 0:
+            return None
+        rel_waves = [x for x in self._committed(m, "frontier") if x > last_fetch]
+        # no cache: wave_r (the redirect-resolved superset) is the
+        # checkpointed handle in this path
+        wave = self._read("frontier", rel_waves).filter(
+            (F.col("depth") == depth) & (F.col("repetition") == 1)
+        ).select(*WAVE_COLS)
+        return wave, None, n_sched, 0, []
 
-    def _run_wave_body(self, m: Dict, depth: int, _pools: List) -> Dict:
+    def _schedule_polite(self, m: Dict, depth: int) -> Optional[Scheduled]:
+        """Politeness / robots mode: per-host budgets split a depth into
+        sub-waves, so each wave schedules the depth's rows not fetched
+        by an earlier sub-wave (operators.scheduler.schedule_wave)."""
         cfg = self.cfg
-        wave_id = m["next_wave"]
-        t0 = time.monotonic()
+        frontier = self._read("frontier", self._committed(m, "frontier"))
+        free_d = frontier.filter(
+            (F.col("depth") == depth) & (F.col("repetition") == 1)
+        )
+        fetches_prev = self._read("fetches", self._committed(m, "fetches"))
+        if fetches_prev is not None:
+            done = fetches_prev.filter(F.col("depth") == depth).select(
+                "task_id", "url_norm"
+            ).distinct()
+            free_d = free_d.join(done, ["task_id", "url_norm"], "left_anti")
+        sched = schedule_wave(
+            free_d, self.robots, cfg.host_wave_budget, cfg.obey_robots,
+            wave_interval_ms=cfg.wave_interval_ms,
+            priority=self.priority,
+        ).cache()
+        wave = sched.filter(F.col("granted")).select(*WAVE_COLS).cache()
+        blocked = sched.filter(F.col("blocked"))
+        n_sched = wave.count()
+        n_blocked = blocked.count()
+        if n_sched == 0 and n_blocked == 0:
+            wave.unpersist()
+            sched.unpersist()
+            return None
+        return wave, blocked if n_blocked else None, n_sched, n_blocked, [wave, sched]
 
-        trace_on = os.environ.get("PYCRAWLER_TRACE", "") == "1"
-        _last = [time.monotonic()]
+    def _fetch_extract(self, wave_r: DataFrame, n_sched: int, link_wave: bool) -> DataFrame:
+        """Fetch = corpus equi-join on the FINAL url (S4/J6; replaces
+        crawler.py:165), with sha + fused page-feature extraction in the
+        same projection: one html->Python pass per wave, html itself
+        dropped (only collect_requests still needs it downstream).
 
-        def trace(label: str) -> None:
-            if trace_on:
-                now = time.monotonic()
-                print(f"[wave {wave_id}] {label}: {now - _last[0]:.2f}s",
-                      flush=True)
-                _last[0] = now
-
-        use_scheduler = cfg.politeness or cfg.obey_robots
-        frontier_waves = self._committed(m, "frontier")
-
-        if not use_scheduler:
-            # Atomic-depth mode, zero scheduling jobs: the manifest
-            # records how many rows each wave inserted at each depth,
-            # so the eligible set is exactly the frontier deltas newer
-            # than the last fetch wave at this depth (a later seed
-            # ingest reopens the depth with only its OWN rows — never
-            # refetching the already-crawled ones).
-            fetch_ids = [w["wave_id"] for w in m["waves"]
-                         if w.get("kind") == "fetch" and w["depth"] == depth]
-            last_fetch = max(fetch_ids) if fetch_ids else -1
-            n_sched = 0
-            for w in m["waves"]:
-                if w["wave_id"] <= last_fetch:
-                    continue
-                if w.get("kind") == "seeds":
-                    n_sched += w.get("inserts_by_depth", {}).get(str(depth), 0)
-                elif w.get("kind") == "fetch" and w.get("insert_depth") == depth:
-                    n_sched += w.get("n_inserted", 0)
-            if n_sched == 0:
-                return {"wave_id": wave_id, "depth": depth, "scheduled": 0,
-                        "blocked": 0, "exhausted": True}
-            rel_waves = [x for x in frontier_waves if x > last_fetch]
-            frontier = self._read("frontier", rel_waves)
-            # no cache: wave_r (the redirect-resolved superset) is the
-            # cached handle in this path
-            wave = frontier.filter(
-                (F.col("depth") == depth) & (F.col("repetition") == 1)
-            ).select(
-                "task_id", "url", "url_norm", "host", "depth", "seq", "from_url"
-            )
-            blocked = None
-            n_blocked = 0
-        else:
-            frontier = self._read("frontier", frontier_waves)
-            free_d = frontier.filter(
-                (F.col("depth") == depth) & (F.col("repetition") == 1)
-            )
-            # a depth spans several politeness sub-waves: drop rows
-            # already fetched in earlier sub-waves
-            fetches_prev = self._read("fetches", self._committed(m, "fetches"))
-            if fetches_prev is not None:
-                done = fetches_prev.filter(F.col("depth") == depth).select(
-                    "task_id", "url_norm"
-                ).distinct()
-                free_d = free_d.join(done, ["task_id", "url_norm"], "left_anti")
-            sched = schedule_wave(
-                free_d, self.robots, cfg.host_wave_budget, cfg.obey_robots,
-                wave_interval_ms=cfg.wave_interval_ms,
-                priority=self.priority,
-            ).cache()
-            wave = sched.filter(F.col("granted")).select(
-                "task_id", "url", "url_norm", "host", "depth", "seq", "from_url"
-            ).cache()
-            blocked = sched.filter(F.col("blocked"))
-            n_sched = wave.count()
-            n_blocked = blocked.count()
-            if n_sched == 0 and n_blocked == 0:
-                wave.unpersist()
-                sched.unpersist()
-                return {"wave_id": wave_id, "depth": depth, "scheduled": 0,
-                        "blocked": 0, "exhausted": True}
-        trace(f"schedule ({n_sched} urls)")
-
-        # --- fetch = corpus equi-join (S4/J6; replaces crawler.py:165) ----
-        # redirect chains resolve BEFORE the fetch join via the (tiny)
-        # precomputed closure table, so the join runs on the FINAL url
-        # and the corpus is scanned exactly once per wave
-        closure = self._redirect_closure()
-        trace("closure ready")
-        # localCheckpoint, not cache: the resolved wave feeds 5-6 jobs
-        # per wave, and each would re-analyze the full lineage;
-        # truncating it makes every downstream plan tiny. Durability
-        # caveat: localCheckpoint blocks are NOT fault-tolerant — on
-        # executor loss the job FAILS (Spark cannot recompute truncated
-        # lineage) and the wave must be re-run at the application
-        # level (the resume path replays it from the manifest, which
-        # is exactly what a driver restart does anyway). On a real
-        # cluster with frequent preemption, switch to reliable
-        # checkpointing via spark.sparkContext.setCheckpointDir.
-        # eager=False: the first consumer (the broadcast build of the
-        # wave side, or the fetch join itself) materializes it — an
-        # eager checkpoint here would be one more sequential job floor
-        wave_r = self._resolve_targets(wave, closure).localCheckpoint(eager=False)
-        trace("wave resolved (lazy ckpt)")
+        Link waves fuse href RESOLUTION into the same pass
+        (page_features_resolve_udf): the resolved-link structs come back
+        in one Arrow trip and the candidate pipeline's explode is pure
+        JVM — no second Python stage over every discovered link. The
+        final depth collects no links -> skip both."""
+        cfg = self.cfg
         pages_raw = self._read_pages()
         # K1 fidelity: the reference persists response headers per
         # fetch (SaveURL.py:71-72 resheaders JSON). A stored-page
@@ -756,25 +746,12 @@ class CrawlEngine:
         wave_b = (
             F.broadcast(wave_r) if n_sched <= cfg.broadcast_wave_max_rows else wave_r
         )
-        # single html->Python pass per wave: sha + fused extraction in
-        # the projection, html itself dropped from the cache (it is the
-        # fat column; only collect_requests still needs it downstream).
-        # Link waves fuse href RESOLUTION into the same pass
-        # (page_features_resolve_udf): the resolved-link structs come
-        # back in one Arrow trip and the candidate pipeline's explode
-        # is pure JVM — no second Python stage over every discovered
-        # link. The final depth collects no links -> skip both.
-        collect_links = depth < cfg.depth and cfg.recursive
-        if collect_links:
+        if link_wave:
             # slim struct (6 fields) unless F6 url_filters are
             # registered — a pluggable predicate may reference any URL
             # component, so only then ship the full 11-field struct
             # through Arrow and the explode (links are the wave's
             # biggest intermediate).
-            from pycrawler_spark.functions.udfs import (
-                page_features_resolve_slim_udf,
-            )
-
             resolve = (
                 page_features_resolve_udf
                 if self.url_filters
@@ -792,7 +769,7 @@ class CrawlEngine:
             joined = joined.repartition(
                 self.spark.sparkContext.defaultParallelism * 2
             )
-        hits = joined.select(
+        return joined.select(
             "task_id", "url", "url_final", "url_norm", "final_norm",
             "host", "depth", "seq", "from_url", "redirect_chain",
             "resheaders",
@@ -800,389 +777,332 @@ class CrawlEngine:
             pf_col.alias("pf"),
             *(["html"] if cfg.collect_requests else []),
         )
-        # checkpoint only when the candidate/requests stage re-reads
-        # hits across SEPARATE jobs. Within the single fetch-write job
-        # the misses anti-join branch does not recompute the corpus
-        # join: Spark's ReuseExchange dedups the identical scan+join
-        # subtree, and checkpointing there would only burn memory on
-        # materialized extracted_text rows. EAGER on purpose: the
-        # fetch write and the link chain then fork CONCURRENTLY from
-        # finished blocks — lazy here would make two driver threads
-        # race to materialize the same partitions (correct but noisy:
-        # the loser's accumulator updates land on a cleaned-up job).
-        import concurrent.futures as _cf
 
-        pool = _cf.ThreadPoolExecutor(max_workers=5)
-        _pools.append(pool)  # cleaned up by _run_wave on any failure
-        cache_hits = collect_links or cfg.collect_requests
-        pre_tasks_dim = pre_seen = None
-        if cache_hits:
-            trace("hits defined")
-            # the eager checkpoint is EXECUTOR work (the wave's fused
-            # extraction UDF); run it from a pool thread and spend the
-            # driver on the link stage's metadata reads (tasks/seen
-            # parquet listing + schema) meanwhile — measured ~0.7 s of
-            # driver-only time that previously idled all cores
-            fut_ck = pool.submit(hits.localCheckpoint, True)
-            if collect_links:
-                pre_tasks_dim = self._read(
-                    "tasks", [max(self._committed(m, "tasks"))]
-                )
-                pre_seen = self._read("seen", self._committed(m, "seen"))
-            hits = fut_ck.result()
-            trace("hits checkpointed")
+    def _checkpoint_hits(
+        self, pool: ThreadPoolExecutor, m: Dict, hits: DataFrame, link_wave: bool
+    ) -> Tuple[DataFrame, Optional[DataFrame], Optional[DataFrame]]:
+        """Materialize ``hits`` when the candidate/requests stage
+        re-reads it across SEPARATE jobs; returns (hits, tasks_dim,
+        seen_all), the last two read only on link waves.
+
+        Without those stages the single fetch-write job does not
+        recompute the corpus join for its misses anti-join (Spark's
+        ReuseExchange dedups the identical scan+join subtree), and a
+        checkpoint would only burn memory on extracted_text rows.
+        EAGER on purpose: the fetch write and the link chain then fork
+        CONCURRENTLY from finished blocks — lazy would make two driver
+        threads race to materialize the same partitions. The checkpoint
+        is executor work (the fused extraction UDF), so it runs on a
+        pool thread while the driver reads the link stage's tasks/seen
+        metadata (parquet listing + schema)."""
+        if not (link_wave or self.cfg.collect_requests):
+            return hits, None, None
+        ckpt = pool.submit(hits.localCheckpoint, True)
+        tasks_dim = seen_all = None
+        if link_wave:
+            tasks_dim = self._read("tasks", [max(self._committed(m, "tasks"))])
+            seen_all = self._read("seen", self._committed(m, "seen"))
+        return ckpt.result(), tasks_dim, seen_all
+
+    def _fetch_rows(self, wave_id: int, hits: DataFrame, wave_r: DataFrame,
+                    blocked: Optional[DataFrame]) -> DataFrame:
+        """Fetch-result rows (K1/M2 SaveURL; modules/SaveURL.py:46-78):
+        hits (200), misses and robots-blocked rows, each projected onto
+        FETCH_SCHEMA, then one row per repetition."""
+        cfg = self.cfg
         # miss = requested url absent from corpus (chain empty) OR the
         # chain dead-ended on a target absent from corpus (chain kept)
         misses = wave_r.join(
             hits.select("task_id", "url"), ["task_id", "url"], "left_anti"
         )
-        trace("fetch join defined")
-
-        # --- fetch-result rows (K1/M2 SaveURL; modules/SaveURL.py:46-78) ---
-        hit_rows = hits.select(
-            F.lit(wave_id).alias("wave_id"),
-            "task_id",
-            "url",
-            "url_final",
-            "url_norm",
-            "host",
-            "depth",
-            "seq",
-            F.lit(200).alias("code"),
-            F.lit("GET").alias("method"),
-            F.lit("text/html").alias("content"),
-            F.col("pf.extracted_text").alias("extracted_text"),
-            F.col("pf.meta_headers").alias("meta_headers"),
-            F.col("pf.has_login_form").alias("has_login_form"),
-            F.col("pf.has_cookie_banner").alias("has_cookie_banner"),
-            "redirect_chain",
-            "body_sha256",
-            "resheaders",
-        )
-        miss_rows = misses.select(
-            F.lit(wave_id).alias("wave_id"),
-            "task_id",
-            "url",
-            F.lit(None).cast("string").alias("url_final"),
-            "url_norm",
-            "host",
-            "depth",
-            "seq",
-            F.lit(cfg.code_response_error).alias("code"),
-            F.lit(None).cast("string").alias("method"),
-            F.lit(None).cast("string").alias("content"),
-            F.lit(None).cast("string").alias("extracted_text"),
-            F.lit(None).cast("array<string>").alias("meta_headers"),
-            F.lit(None).cast("boolean").alias("has_login_form"),
-            F.lit(None).cast("boolean").alias("has_cookie_banner"),
-            "redirect_chain",
-            F.lit(None).cast("string").alias("body_sha256"),
-            F.lit(None).cast("string").alias("resheaders"),
-        )
-        fetch_rows = hit_rows.unionByName(miss_rows)
-        if blocked is not None and n_blocked:
-            blocked_rows = blocked.select(
-                F.lit(wave_id).alias("wave_id"), "task_id", "url",
-                F.lit(None).cast("string").alias("url_final"),
-                "url_norm", "host", "depth", "seq",
-                F.lit(cfg.code_robots_blocked).alias("code"),
-                F.lit(None).cast("string").alias("method"),
-                F.lit(None).cast("string").alias("content"),
-                F.lit(None).cast("string").alias("extracted_text"),
-                F.lit(None).cast("array<string>").alias("meta_headers"),
-                F.lit(None).cast("boolean").alias("has_login_form"),
-                F.lit(None).cast("boolean").alias("has_cookie_banner"),
-                F.expr(f"cast(null as {REDIRECT_T})").alias("redirect_chain"),
-                F.lit(None).cast("string").alias("body_sha256"),
-                F.lit(None).cast("string").alias("resheaders"),
+        rows = _fetch_projection(
+            hits, wave_id, 200,
+            method=F.lit("GET"), content=F.lit("text/html"),
+            **{c: F.col(c) for c in (
+                "url_final", "redirect_chain", "body_sha256", "resheaders")},
+            **{c: F.col(f"pf.{c}") for c in PAGE_FEATURES},
+        ).unionByName(_fetch_projection(
+            misses, wave_id, cfg.code_response_error,
+            redirect_chain=F.col("redirect_chain"),
+        ))
+        if blocked is not None:
+            rows = rows.unionByName(
+                _fetch_projection(blocked, wave_id, cfg.code_robots_blocked)
             )
-            fetch_rows = fetch_rows.unionByName(blocked_rows)
         # O3 repetitions: each scheduled URL is revisited k times
         # consecutively (database.py:275-279); same corpus -> same result.
         rep_col = (
             F.lit(1) if cfg.repetitions == 1
             else F.explode(F.sequence(F.lit(1), F.lit(cfg.repetitions)))
         )
-        fetch_rows = fetch_rows.withColumn("repetition", rep_col).select(
-            *FETCH_COLS
-        )
-        # hit count observed ON the write job — no read-back job, no
-        # recomputation of the fetch join
-        from pyspark.sql import Observation
+        return rows.withColumn("repetition", rep_col).select(*FETCH_COLS)
 
-        obs_f = Observation()
-        fetch_rows = fetch_rows.observe(
-            obs_f,
+    def _seen_plan(self, m: Dict) -> Tuple[bool, bool]:
+        """(use_semi, use_bloom) for this wave's seen probe (see
+        relevant_seen). While the accumulated history is smaller than
+        ~a wave's worth of candidates, the candidate-key distinct +
+        semi-join is a full wave-sized shuffle spent to avoid shipping a
+        few thousand rows into the cogroup — skip it. last_found
+        approximates this wave's candidate count (the previous wave's
+        discoveries ARE this wave's parents). The bloom prefilter pays
+        off once the persistent seen table dwarfs the wave; below the
+        threshold the exact semi-join alone is cheaper (2 fewer jobs)."""
+        seen_estimate = sum(w.get("found", 0) for w in m["waves"])
+        last_found = next(
+            (w["found"] for w in reversed(m["waves"])
+             if w.get("kind") == "fetch" and w.get("found", 0) > 0),
+            0,
+        )
+        return (seen_estimate > 4 * max(1, last_found),
+                seen_estimate > self.cfg.bloom_auto_threshold)
+
+    def _candidates(self, hits: DataFrame, tasks_dim: DataFrame, cache: bool) -> DataFrame:
+        """Link candidates of this wave's hits (operators.links). Cached
+        when the semi-join (and possibly bloom) gives the candidate
+        pipeline 2-3 consumers; otherwise the kernel cogroup is its
+        ONLY consumer and caching the wave's biggest intermediate would
+        be pure overhead."""
+        cands = candidate_links(
+            hits.withColumn("links", F.col("pf.links")),
+            tasks_dim, self.cfg, self.adult_sites, self.url_filters,
+        )
+        return cands.cache() if cache else cands
+
+    def _seen_probe(self, seen_all: Optional[DataFrame], cands: DataFrame,
+                    wave: DataFrame, use_semi: bool, use_bloom: bool) -> DataFrame:
+        """The slice of the persistent seen set this wave's candidates
+        can hit (operators.seen.relevant_seen)."""
+        cfg = self.cfg
+        if seen_all is None:
+            seen_all = empty_df(self.spark, "task_id long, url_norm string")
+        elif cfg.use_scheduler and "sbucket" in seen_all.columns:
+            # politeness sub-waves touch a subset of tasks: prune the
+            # persistent seen read to the task buckets present in THIS
+            # wave (directory-partition pruning — the scan never lists,
+            # reads or hashes the other buckets). In atomic-depth mode
+            # every task is in every wave, so pruning is a no-op and
+            # the bucket probe job is skipped.
+            bks = [
+                r[0]
+                for r in wave.select(
+                    F.pmod(F.col("task_id"), F.lit(cfg.seen_buckets))
+                    .cast("int")
+                    .alias("b")
+                )
+                .distinct()
+                .collect()
+            ]
+            if len(bks) < cfg.seen_buckets:
+                seen_all = seen_all.filter(F.col("sbucket").isin(bks))
+        return relevant_seen(
+            seen_all, cands, use_bloom=use_bloom, use_semi=use_semi,
+            fpp=cfg.bloom_fpp,
+        )
+
+    def _kernel(self, cands: DataFrame, seen_rel: DataFrame) -> DataFrame:
+        """URL-seen dedup + per-task budgets (dedup_budget_kernel),
+        materialized EAGERLY once, up front: its three consumers
+        (frontier / seen / tasks writes) then all run CONCURRENTLY from
+        finished blocks. Lazy here made the frontier write materialize
+        the kernel alone while the seen + tasks writes queued behind it
+        (~1 s of tail at 8 cores)."""
+        return dedup_budget_kernel(cands, seen_rel, self.cfg).localCheckpoint(eager=True)
+
+    # ----- wave writes (each one Spark job, run on the wave's pool) ---------
+
+    def _write_fetches(self, rows: DataFrame, wave_id: int) -> int:
+        """Returns the hit count, observed ON the write job — no
+        read-back job, no recomputation of the fetch join."""
+        obs = Observation()
+        rows.observe(
+            obs,
             F.sum(
                 F.when(
                     (F.col("code") == 200) & (F.col("repetition") == 1), 1
                 ).otherwise(0)
             ).alias("n_ok"),
+        ).write.parquet(self._dir("fetches", wave_id))
+        return int(obs.get["n_ok"] or 0)
+
+    def _write_requests(self, hits: DataFrame, wave_id: int) -> None:
+        """M3 CollectRequests (+ M6 InstrumentMedia) per wave;
+        sub-resources belong to the RENDERED document -> final url."""
+        reqs = derive_requests(hits.withColumn("url", F.col("url_final")))
+        if self.cfg.instrument_media:
+            reqs = instrument_media(reqs)
+        reqs.withColumn("wave_id", F.lit(wave_id)).write.parquet(
+            self._dir("requests", wave_id)
         )
 
-        # --- concurrent wave jobs -----------------------------------------
-        # Independent writes are SUBMITTED CONCURRENTLY (Spark's
-        # scheduler interleaves jobs from multiple driver threads at
-        # task granularity): phase 1 runs the fetch write beside the
-        # link-discovery chain — they share the lazily-checkpointed
-        # `hits` (block-level locks make concurrent materialization
-        # compute-or-wait, never compute-twice) and alternate between
-        # Python-UDF-heavy and JVM-shuffle-heavy stages, so each fills
-        # the other's idle slots; phase 2 overlaps the three small
-        # bookkeeping writes (seen / tasks / lineage), which otherwise
-        # pay three sequential per-job floors (~0.2-0.5 s each — pure
-        # wave overhead that does not shrink with cores).
-        def _job_fetches() -> int:
-            fetch_rows.write.parquet(self._dir("fetches", wave_id))
-            return int(obs_f.get["n_ok"] or 0)
+    def _write_frontier(self, kout: DataFrame, tasks_dim: DataFrame, depth: int,
+                        wave_id: int) -> None:
+        """Inserted links become the next depth's frontier rows. The
+        per-task seq base comes from the tasks snapshot (updated each
+        wave) — no frontier-wide max-scan per wave."""
+        cfg = self.cfg
+        inserted = kout.filter(F.col("kind") == "link").filter(F.col("inserted"))
+        bases = tasks_dim.select("task_id", F.col("max_seq").alias("base"))
+        new_frontier = inserted.join(F.broadcast(bases), "task_id").select(
+            "task_id",
+            "url",
+            "url_norm",
+            "host",
+            F.lit(depth + 1).alias("depth"),
+            F.explode(F.sequence(F.lit(1), F.lit(cfg.repetitions))).alias(
+                "repetition"
+            ),
+            (F.col("base") + F.col("order_rank")).alias("seq"),
+            "from_url",
+        )
+        # hot-host salting (north rule): hash-distributing by host
+        # alone would put a mega-host's entire wave in one partition;
+        # the salt spreads each host over salt_buckets partitions while
+        # keeping host locality for pruning (Iceberg: bucket(host_buckets,
+        # host) + bucket(salt) sort)
+        new_frontier.repartition(
+            cfg.host_buckets,
+            host_bucket(F.col("host"), cfg.host_buckets),
+            F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)),
+        ).write.parquet(self._dir("frontier", wave_id))
 
-        n_found = n_inserted = 0
-        wrote: List[str] = ["fetches", "metrics"]
+    def _write_task_budgets(self, kout: DataFrame, tasks_dim: DataFrame,
+                            wave_id: int) -> Tuple[int, int]:
+        """Tasks snapshot with budgets + max_seq advanced by this wave:
+        ONE Spark job over (tasks snapshot x kernel agg), wave counters
+        observed on the same write — nothing task-proportional ever
+        reaches the driver (a 10^7-site crawl keeps a 10^7-row tasks
+        table distributed). Returns (found, inserted)."""
+        agg = kout.groupBy("task_id").agg(
+            F.sum(F.when(F.col("kind") == "link", 1).otherwise(0)).alias("n_found"),
+            F.sum(F.when(F.col("inserted"), 1).otherwise(0)).alias("n_ins"),
+        )
+        obs = Observation()
+        jt = tasks_dim.join(agg, "task_id", "left").observe(
+            obs,
+            F.sum(F.coalesce(F.col("n_found"), F.lit(0))).alias("found"),
+            F.sum(F.coalesce(F.col("n_ins"), F.lit(0))).alias("ins"),
+        )
+        jt.select(
+            *[c for c in tasks_dim.columns if c not in ("budget", "max_seq")],
+            F.greatest(
+                F.col("budget") - F.coalesce(F.col("n_found"), F.lit(0)),
+                F.lit(0),
+            ).cast("int").alias("budget"),
+            (F.col("max_seq") + F.coalesce(F.col("n_ins"), F.lit(0)))
+            .cast("long")
+            .alias("max_seq"),
+        ).coalesce(4).write.parquet(self._dir("tasks", wave_id))
+        got = obs.get
+        return int(got["found"] or 0), int(got["ins"] or 0)
 
-        def _job_requests() -> None:
-            # M3 CollectRequests (+ M6 InstrumentMedia) per wave;
-            # sub-resources belong to the RENDERED document -> final url
-            from pycrawler_spark.operators.requests import (
-                derive_requests,
-                instrument_media,
+    def _write_lineage(self, wave_id: int, depth: int) -> None:
+        """Per-partition (host) lineage — which host-bucket produced
+        what in this wave (resumable audit trail, north rule). A Spark
+        job over the freshly written fetch wave's slim columns (columnar
+        read, html never touched): at 10^7 hosts per wave this table
+        must never pass through the driver."""
+        cfg = self.cfg
+        fdf = self.spark.read.parquet(self._dir("fetches", wave_id))
+        (
+            fdf.filter(F.col("repetition") == 1)
+            .groupBy(
+                host_bucket(F.col("host"), cfg.host_buckets).alias("bucket"),
+                "host",
             )
+            .agg(
+                F.count("*").alias("n_scheduled"),
+                F.sum(F.when(F.col("code") == 200, 1).otherwise(0)).alias("n_ok"),
+                F.min("seq").alias("seq_lo"),
+                F.max("seq").alias("seq_hi"),
+            )
+            .withColumn("wave_id", F.lit(wave_id))
+            .withColumn("depth", F.lit(depth))
+            .coalesce(4)
+            .write.parquet(self._dir("lineage", wave_id))
+        )
 
-            reqs = derive_requests(hits.withColumn("url", F.col("url_final")))
-            if cfg.instrument_media:
-                reqs = instrument_media(reqs)
-            reqs.withColumn("wave_id", F.lit(wave_id)).write.parquet(
-                self._dir("requests", wave_id)
-            )
+    def _run_wave(self, m: Dict, depth: int) -> Dict:
+        """Run and commit one wave at ``depth``; returns its stats.
 
-        fut_fetch = pool.submit(_job_fetches)
-        fut_requests = pool.submit(_job_requests) if cfg.collect_requests else None
-        if cfg.collect_requests:
-            wrote.append("requests")
-        if depth < cfg.depth and cfg.recursive:
-            tasks_dim = (
-                pre_tasks_dim
-                if pre_tasks_dim is not None
-                else self._read("tasks", [max(self._committed(m, "tasks"))])
-            )
-            # seen-history plan choice (see relevant_seen): while the
-            # accumulated history is smaller than ~a wave's worth of
-            # candidates, the candidate-key distinct + semi-join is a
-            # full wave-sized shuffle spent to avoid shipping a few
-            # thousand rows into the cogroup — skip it. last_found
-            # approximates this wave's candidate count (the previous
-            # wave's discoveries ARE this wave's parents).
-            seen_estimate = sum(w.get("found", 0) for w in m["waves"])
-            last_found = next(
-                (w["found"] for w in reversed(m["waves"])
-                 if w.get("kind") == "fetch" and w.get("found", 0) > 0),
-                0,
-            )
-            use_semi = seen_estimate > 4 * max(1, last_found)
-            cands = candidate_links(
-                hits.withColumn("links", F.col("pf.links")),
-                tasks_dim, cfg, self.adult_sites, self.url_filters,
-            )
-            if use_semi or trace_on:
-                # cache: with the semi-join (and possibly bloom) on,
-                # the candidate pipeline (urljoin + PSL parse pandas
-                # UDFs) has 2-3 consumers; with them off the kernel
-                # cogroup is the ONLY consumer and a cache write of the
-                # wave's biggest intermediate would be pure overhead
-                cands = cands.cache()
-            seen_all = (
-                pre_seen
-                if pre_seen is not None
-                else self._read("seen", self._committed(m, "seen"))
-            )
-            if seen_all is None:
-                seen_all = empty_df(self.spark, "task_id long, url_norm string")
-            elif use_scheduler and "sbucket" in seen_all.columns:
-                # politeness sub-waves touch a subset of tasks: prune
-                # the persistent seen read to the task buckets present
-                # in THIS wave (directory-partition pruning — the scan
-                # never lists, reads or hashes the other buckets), then
-                # bloom, then exact semi-join. In atomic-depth mode
-                # every task is in every wave, so pruning is a no-op
-                # and the bucket probe job is skipped.
-                bks = [
-                    r[0]
-                    for r in wave.select(
-                        F.pmod(F.col("task_id"), F.lit(cfg.seen_buckets))
-                        .cast("int")
-                        .alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-                if len(bks) < cfg.seen_buckets:
-                    seen_all = seen_all.filter(F.col("sbucket").isin(bks))
-            # bloom prefilter pays off once the persistent seen table
-            # dwarfs the wave; below the threshold the exact semi-join
-            # alone is cheaper (2 fewer jobs per wave)
-            seen_rel = relevant_seen(
-                seen_all,
-                cands,
-                use_bloom=seen_estimate > cfg.bloom_auto_threshold,
-                use_semi=use_semi,
-                fpp=cfg.bloom_fpp,
-            )
-            trace("seen_rel defined")
-            if trace_on:
-                trace(f"cands materialized ({cands.count()})")
-            # EAGER: materialize the kernel output once, up front —
-            # its three consumers (frontier / seen / tasks writes) then
-            # all run CONCURRENTLY from finished blocks. Lazy here made
-            # the frontier write materialize the kernel alone while the
-            # seen + tasks writes queued behind it (~1 s of tail at 8
-            # cores).
-            kout = dedup_budget_kernel(cands, seen_rel, cfg).localCheckpoint(eager=True)
-            if trace_on:
-                trace(f"kernel materialized ({kout.count()})")
-
-            links = kout.filter(F.col("kind") == "link")
-            inserted = links.filter(F.col("inserted"))
-            # per-task seq base comes from the tasks snapshot (updated
-            # each wave) — no frontier-wide max-scan per wave
-            bases = tasks_dim.select(
-                "task_id", F.col("max_seq").alias("base")
-            )
-            new_frontier = (
-                inserted.join(F.broadcast(bases), "task_id")
-                .select(
-                    "task_id",
-                    "url",
-                    "url_norm",
-                    "host",
-                    F.lit(depth + 1).alias("depth"),
-                    F.explode(
-                        F.sequence(F.lit(1), F.lit(cfg.repetitions))
-                    ).alias("repetition"),
-                    (F.col("base") + F.col("order_rank")).alias("seq"),
-                    "from_url",
+        Independent Spark jobs are SUBMITTED CONCURRENTLY from a small
+        thread pool (Spark's scheduler interleaves jobs from several
+        driver threads at task granularity): the fetch write runs beside
+        the link chain (candidates → seen probe → kernel), whose
+        JVM-shuffle-heavy stages fill the Python-UDF-heavy write's idle
+        slots; the frontier / seen / tasks writes then run together from
+        the materialized kernel output instead of paying three
+        sequential per-job floors. Lineage reads the written fetch wave,
+        so it starts after the fetch write."""
+        cfg = self.cfg
+        wave_id = m["next_wave"]
+        t0 = time.monotonic()
+        schedule = self._schedule_polite if cfg.use_scheduler else self._schedule_atomic
+        scheduled = schedule(m, depth)
+        if scheduled is None:
+            return {"wave_id": wave_id, "depth": depth, "scheduled": 0,
+                    "blocked": 0, "exhausted": True}
+        wave, blocked, n_sched, n_blocked, cached = scheduled
+        link_wave = depth < cfg.depth and cfg.recursive
+        # A failed wave must leave no writer thread alive: an orphan
+        # writer would race the manifest-replay retry of the SAME wave
+        # on the same directories.
+        pool = ThreadPoolExecutor(max_workers=5, thread_name_prefix="crawl-wave")
+        try:
+            # Redirect chains resolve BEFORE the fetch join via the
+            # (tiny) precomputed closure, so the join runs on the FINAL
+            # url and the corpus is scanned once per wave.
+            # localCheckpoint, not cache: the resolved wave feeds 5-6
+            # jobs, and each would re-analyze the full lineage. Not
+            # fault-tolerant — on executor loss the job FAILS and the
+            # wave is re-run from the manifest, exactly what a driver
+            # restart does anyway; on a cluster with frequent
+            # preemption, switch to reliable checkpointing
+            # (spark.sparkContext.setCheckpointDir). eager=False: the
+            # first consumer (the broadcast build or the fetch join)
+            # materializes it, one sequential job floor fewer.
+            wave_r = self._resolve_targets(
+                wave, self._redirect_closure()
+            ).localCheckpoint(eager=False)
+            hits = self._fetch_extract(wave_r, n_sched, link_wave)
+            hits, tasks_dim, seen_all = self._checkpoint_hits(pool, m, hits, link_wave)
+            jobs = {"fetches": pool.submit(
+                self._write_fetches,
+                self._fetch_rows(wave_id, hits, wave_r, blocked), wave_id,
+            )}
+            if cfg.collect_requests:
+                jobs["requests"] = pool.submit(self._write_requests, hits, wave_id)
+            if link_wave:
+                use_semi, use_bloom = self._seen_plan(m)
+                cands = self._candidates(hits, tasks_dim, cache=use_semi)
+                cached.append(cands)
+                seen_rel = self._seen_probe(seen_all, cands, wave, use_semi, use_bloom)
+                kout = self._kernel(cands, seen_rel)
+                jobs["frontier"] = pool.submit(
+                    self._write_frontier, kout, tasks_dim, depth, wave_id
                 )
-            )
-            # hot-host salting (north rule): hash-distributing by host
-            # alone would put a mega-host's entire wave in one
-            # partition; the salt spreads each host over salt_buckets
-            # partitions while keeping host locality for pruning
-            # (Iceberg: bucket(host_buckets, host) + bucket(salt) sort)
-            from pycrawler_spark.functions.udfs import host_bucket
-
-            def _job_frontier():
-                new_frontier.repartition(
-                    cfg.host_buckets,
-                    host_bucket(F.col("host"), cfg.host_buckets),
-                    F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)),
-                ).write.parquet(self._dir("frontier", wave_id))
-
-            fut_frontier = pool.submit(_job_frontier)
-            # phase 2a (overlapped): frontier + seen delta + tasks
-            # snapshot — all three read the eagerly-materialized kernel
-            # checkpoint, independent of each other and of the fetch
-            # write.
-            # seen: wave-internal distinct only. Replays of keys
-            # already in older deltas are harmless — every consumer
-            # (bloom build, semi-join, kernel set) is idempotent on
-            # duplicates — so no cross-history anti-join and no
-            # distinct (it was a full shuffle). Directory-partitioned
-            # by task bucket (see _write_seen) for pruned reads.
-            fut_seen = pool.submit(
-                self._write_seen, kout.select("task_id", "url_norm"), wave_id
-            )
-
-            def _job_tasks():
-                # budgets + max_seq: ONE Spark job over (tasks snapshot
-                # x kernel agg), wave counters observed on the same
-                # write — nothing task-proportional ever reaches the
-                # driver (a 10^7-site crawl keeps a 10^7-row tasks
-                # table distributed)
-                from pyspark.sql import Observation as _Obs
-
-                agg = kout.groupBy("task_id").agg(
-                    F.sum(
-                        F.when(F.col("kind") == "link", 1).otherwise(0)
-                    ).alias("n_found"),
-                    F.sum(F.when(F.col("inserted"), 1).otherwise(0)).alias(
-                        "n_ins"
-                    ),
+                # seen: wave-internal keys only. Replays of keys already
+                # in older deltas are harmless — every consumer (bloom
+                # build, semi-join, kernel set) is idempotent on
+                # duplicates — so no cross-history anti-join.
+                jobs["seen"] = pool.submit(
+                    self._write_seen, kout.select("task_id", "url_norm"), wave_id
                 )
-                obs_t = _Obs()
-                jt = tasks_dim.join(agg, "task_id", "left").observe(
-                    obs_t,
-                    F.sum(F.coalesce(F.col("n_found"), F.lit(0))).alias("found"),
-                    F.sum(F.coalesce(F.col("n_ins"), F.lit(0))).alias("ins"),
+                jobs["tasks"] = pool.submit(
+                    self._write_task_budgets, kout, tasks_dim, wave_id
                 )
-                jt.select(
-                    *[c for c in tasks_dim.columns
-                      if c not in ("budget", "max_seq")],
-                    F.greatest(
-                        F.col("budget") - F.coalesce(F.col("n_found"), F.lit(0)),
-                        F.lit(0),
-                    ).cast("int").alias("budget"),
-                    (F.col("max_seq") + F.coalesce(F.col("n_ins"), F.lit(0)))
-                    .cast("long")
-                    .alias("max_seq"),
-                ).coalesce(4).write.parquet(self._dir("tasks", wave_id))
-                got = obs_t.get
-                return int(got["found"] or 0), int(got["ins"] or 0)
-
-            fut_tasks = pool.submit(_job_tasks)
-            wrote += ["frontier", "seen", "tasks"]
-        else:
-            fut_frontier = fut_seen = fut_tasks = None
-
-        # phase-1 barrier: fetches (and requests) on disk
-        n_hits = fut_fetch.result()
-        if fut_requests is not None:
-            fut_requests.result()
-        trace("fetches written")
-
-        # phase 2b: per-partition (host) lineage — which host-bucket
-        # produced what in this wave (resumable audit trail, north
-        # rule). A Spark job over the freshly written fetch wave's slim
-        # columns (columnar read, html never touched): at 10^7 hosts
-        # per wave this table must never pass through the driver.
-        def _job_lineage():
-            from pycrawler_spark.functions.udfs import host_bucket
-
-            fdf = self.spark.read.parquet(self._dir("fetches", wave_id))
-            (
-                fdf.filter(F.col("repetition") == 1)
-                .groupBy(
-                    host_bucket(F.col("host"), cfg.host_buckets).alias("bucket"),
-                    "host",
-                )
-                .agg(
-                    F.count("*").alias("n_scheduled"),
-                    F.sum(F.when(F.col("code") == 200, 1).otherwise(0)).alias(
-                        "n_ok"
-                    ),
-                    F.min("seq").alias("seq_lo"),
-                    F.max("seq").alias("seq_hi"),
-                )
-                .withColumn("wave_id", F.lit(wave_id))
-                .withColumn("depth", F.lit(depth))
-                .coalesce(4)
-                .write.parquet(self._dir("lineage", wave_id))
-            )
-
-        fut_lin = pool.submit(_job_lineage) if cfg.lineage else None
-        if fut_frontier is not None:
-            fut_frontier.result()
-            trace("frontier written")
-        if fut_seen is not None:
-            fut_seen.result()
-            trace("seen written")
-        if fut_tasks is not None:
-            n_found, n_inserted = fut_tasks.result()
-            trace("tasks written")
-            kout.unpersist()
-            cands.unpersist()
-        if fut_lin is not None:
-            fut_lin.result()
-            wrote.append("lineage")
-            trace("lineage written")
-        pool.shutdown(wait=True)
+            # barrier: fetches (and requests) on disk before lineage
+            jobs["fetches"].result()
+            if cfg.collect_requests:
+                jobs["requests"].result()
+            if cfg.lineage:
+                jobs["lineage"] = pool.submit(self._write_lineage, wave_id, depth)
+            done = {table: job.result() for table, job in jobs.items()}
+        finally:
+            pool.shutdown(wait=True, cancel_futures=True)
+            for df in cached:
+                df.unpersist()
+        n_hits = done["fetches"]
+        n_found, n_inserted = done.get("tasks", (0, 0))
         wall = time.monotonic() - t0
         stats = {
             "wave_id": wave_id,
@@ -1197,32 +1117,29 @@ class CrawlEngine:
             "urls_per_sec": round((n_sched + n_found) / max(wall, 1e-9), 1),
             "exhausted": False,
         }
-        import pandas as _pd
+        self._commit(m, stats, ["fetches", "metrics", *list(jobs)[1:]])
+        return stats
 
-        self._write_pandas(_pd.DataFrame([stats]), "metrics", wave_id)
-        trace("metrics written")
-
-        if cache_hits:
-            hits.unpersist()
-        wave_r.unpersist()
-        if use_scheduler:
-            wave.unpersist()
-        if use_scheduler:
-            sched.unpersist()
-
+    def _commit(self, m: Dict, stats: Dict, tables: List[str]) -> None:
+        """Commit point: the metrics row, then the manifest entry —
+        written last, so an interrupted wave is recomputed on resume —
+        then the seen-compaction check."""
+        wave_id = stats["wave_id"]
+        self._write_pandas(pd.DataFrame([stats]), "metrics", wave_id)
         m["waves"].append(
-            {"wave_id": wave_id, "depth": depth, "kind": "fetch",
-             "tables": wrote, "found": n_found,
-             "insert_depth": depth + 1, "n_inserted": n_inserted,
+            {"wave_id": wave_id, "depth": stats["depth"], "kind": "fetch",
+             "tables": tables, "found": stats["found"],
+             "insert_depth": stats["depth"] + 1,
+             "n_inserted": stats["inserted"],
              # delta rows appended to seen this wave (links + parent
              # self-seen rows) — feeds the duplicate-ratio compaction
-             # heuristic in run()
-             "seen_rows": (n_found + n_hits) if "seen" in wrote else 0}
+             # heuristic below
+             "seen_rows": (stats["found"] + stats["hits"])
+             if "seen" in tables else 0}
         )
         m["next_wave"] = wave_id + 1
         self._save_manifest(m)
         self._maybe_compact_seen(m)
-        return stats
 
     def _maybe_compact_seen(self, m: Dict) -> None:
         """Seen deltas skip the dedup shuffle, so duplicate keys
@@ -1252,23 +1169,23 @@ class CrawlEngine:
 
     # ----- full run -----------------------------------------------------------
 
-    def run(self) -> List[Dict]:
-        """Crawl to frontier exhaustion: for each depth level, run waves
-        (politeness may need several sub-waves per depth) until no free
-        URLs remain at that depth, then descend."""
-        all_stats: List[Dict] = []
-        depth = 0
-        while depth <= self.cfg.depth:
+    def waves(self) -> Iterator[Dict]:
+        """Crawl to frontier exhaustion, yielding each wave's stats: for
+        each depth level, run waves (politeness may need several
+        sub-waves per depth) until no free URLs remain at that depth,
+        then descend."""
+        for depth in range(self.cfg.depth + 1):
             while True:
-                m = self._load_manifest()
-                stats = self._run_wave(m, depth)
-                if stats.get("exhausted"):
+                stats = self._run_wave(self._load_manifest(), depth)
+                if stats["exhausted"]:
                     break
-                all_stats.append(stats)
-                if not (self.cfg.politeness or self.cfg.obey_robots):
+                yield stats
+                if not self.cfg.use_scheduler:
                     break  # one wave fetches the whole depth level
-            depth += 1
-        return all_stats
+
+    def run(self) -> List[Dict]:
+        return list(self.waves())
+
 
     # ----- compaction (scale hygiene; Iceberg rewrite_data_files analog) ----
 

@@ -87,20 +87,13 @@ def stream_crawl(
     Returns the per-wave stats list (same shape as ``run()``).
     """
     spark = engine.spark
-    state = {"depth": 0, "stats": []}
+    waves = engine.waves()
+    stats: list = []
 
     def advance() -> None:
-        while state["depth"] <= engine.cfg.depth:
-            m = engine._load_manifest()
-            stats = engine._run_wave(m, state["depth"])
-            atomic = not (engine.cfg.politeness or engine.cfg.obey_robots)
-            if stats.get("exhausted"):
-                state["depth"] += 1
-                continue
-            state["stats"].append(stats)
-            if atomic:
-                state["depth"] += 1  # one wave fetches the whole depth
-            if stats.get("inserted", 0) > 0:
+        for s in waves:
+            stats.append(s)
+            if s["inserted"] > 0:
                 return  # the new frontier delta triggers the next batch
 
     # initial kick OUTSIDE the stream: covers (a) the wave-0 seed
@@ -137,7 +130,7 @@ def stream_crawl(
         q.processAllAvailable()
     finally:
         q.stop()
-    return state["stats"]
+    return stats
 
 
 def stream_seen_filter(
@@ -209,8 +202,6 @@ def stream_fetch_metrics(
 ):
     """Event-time windowed fetch metrics over the engine's fetches log
     (watermarked tumbling window per host)."""
-    from pycrawler_spark.plans.crawl import FETCH_COLS  # noqa: F401
-
     fetches_glob = os.path.join(workdir, "fetches", "wave=*")
     # static schema probe (file streams need an explicit schema)
     schema = spark.read.parquet(fetches_glob).schema

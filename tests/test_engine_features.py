@@ -292,10 +292,12 @@ def test_crawl_delay_caps_host_budget(spark):
 
 
 def test_failed_wave_shuts_down_writer_pool(spark, tmp_path):
-    """An exception escaping the wave body must shut down the wave's
-    writer thread pool (cancelling queued jobs) before propagating, so
-    a manifest-replay retry never races orphan background writers on
-    the same wave directories."""
+    """A write failing inside a wave must propagate out of run() only
+    after the wave's writer pool has shut down, so a manifest-replay
+    retry never races orphan background writers on the same wave
+    directories."""
+    import threading
+
     import pytest as _pytest
 
     from pycrawler_spark.config import CrawlConfig
@@ -311,23 +313,46 @@ def test_failed_wave_shuts_down_writer_pool(spark, tmp_path):
     )
     eng.init_job(spark.read.parquet(seeds_p), pages_p)
 
-    seen_pools = []
-    orig = eng._run_wave_body
+    calls = []
 
-    def failing_body(m, depth, pools):
-        try:
-            return orig(m, depth, pools)
-        finally:
-            seen_pools.extend(pools)
-            raise RuntimeError("injected wave failure")
+    def failing_write_seen(seen, wave, n_files=None):
+        calls.append(threading.current_thread().name)
+        raise RuntimeError("injected seen-write failure")
 
-    eng._run_wave_body = failing_body
-    with _pytest.raises(RuntimeError, match="injected wave failure"):
+    eng._write_seen = failing_write_seen
+    with _pytest.raises(RuntimeError, match="injected seen-write failure"):
         eng.run()
-    assert seen_pools, "wave body never created a writer pool"
-    for pool in seen_pools:
-        # ThreadPoolExecutor._shutdown flips only via shutdown()
-        assert pool._shutdown, "writer pool left running after failure"
+    assert calls and calls[0].startswith("crawl-wave"), calls
+    alive = [t.name for t in threading.enumerate()
+             if t.name.startswith("crawl-wave") and t.is_alive()]
+    assert not alive, f"writer threads left running after failure: {alive}"
+    # the failed wave never committed
+    assert [w["kind"] for w in eng._load_manifest()["waves"]] == ["seeds"]
+
+
+def test_resume_drops_interrupted_compaction(spark, tmp_path):
+    """A crash inside compact() leaves <table>/_compact_tmp behind; it
+    was never committed, so resume() removes it and the table reads."""
+    import os
+    import shutil
+
+    cfg = CrawlConfig(depth=1, max_urls=10)
+    pages_p, seeds_p, _ = write_corpus(
+        str(tmp_path / "c"), seed=11, n_hosts=2, pages_per_host=4
+    )
+    eng = CrawlEngine(spark, str(tmp_path / "job"), cfg, job="compactcrash")
+    eng.init_job(spark.read.parquet(seeds_p), pages_p)
+    eng.run()
+    seen_dir = tmp_path / "job" / "seen"
+    before = {tuple(r) for r in eng.table("seen").collect()}
+    # a half-written compaction snapshot
+    tmp = seen_dir / "_compact_tmp"
+    shutil.copytree(seen_dir / "wave=00001", tmp)
+
+    eng2 = CrawlEngine(spark, str(tmp_path / "job"), cfg, job="compactcrash")
+    eng2.resume()
+    assert not os.path.exists(tmp)
+    assert {tuple(r) for r in eng2.table("seen").collect()} == before
 
 
 def test_manifest_records_extraction_modes(spark, tmp_path):
