@@ -1,119 +1,83 @@
-"""Benchmark harness (driver contract).
+"""Crawl scaling gate: the N -> 4N crawl throughput efficiency.
 
-Measures:
-1. crawl-engine frontier throughput (URLs scheduled+extracted/sec) on
-   a deterministic synthetic wide-fan-out corpus, at TWO parallelism
-   levels — local[N_SMALL] and local[N_BIG] — as the sandbox stand-in
-   for the north rule's N vs 4N executor scaling criterion;
-2. the headline analytic queries from __spark_entry__ at
-   $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
+Runs the SAME crawl job on the SAME deterministic wide fan-out corpus
+at local[N] and local[4N], each in a subprocess pinned with
+``taskset`` to CPUs of this process's affinity mask: N = mask size / 4
+(local[1] -> local[4] on a 4-CPU mask). It refuses to run on a mask
+of fewer than 4 CPUs. Beside the gate it measures the operator
+scaling pairs (skip with ``SPARK_GRAFT_SKIP_OPS_SCALING=1``) and one
+priority-crawl pair at 4N (skip with ``SPARK_GRAFT_SKIP_PRIORITY=1``).
 
-Prints ONE JSON line:
-  {"metric": ..., "value": total_sec, "unit": "sec",
-   "queries": {...per-query sec + crawl metrics...}, "sf": ...}
-and refreshes BENCH.md with the scaling table.
+    python bench.py
+
+Prints ONE JSON line, the run's result dict with ``value`` = the
+steady-state scaling efficiency, and renders its tables into the
+marked block of BENCH.md (the prose around the block is hand-kept).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+BENCH_MD = os.path.join(REPO, "BENCH.md")
+BEGIN = "<!-- bench.py tables: begin -->"
+END = "<!-- bench.py tables: end -->"
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# N vs 4N scaling points. This host advertises 32 CPUs but delivers
-# only ~15-20 effective cores under load (heavy hypervisor steal:
-# 32 raw Python burn processes reach 20.4x single-core throughput,
-# 16 reach 11.7x, while 4x ratios inside the linear window scale at
-# 0.83-0.87). Both scaling points must therefore sit inside the
-# machine-linear regime: N=2 -> 4N=8 cores. On a real cluster N and
-# 4N executors are separate machines where that ceiling is absent.
-SCALE_N = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))
-SCALE_4N = SCALE_N * 4
 BEST_OF = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "2"))
+PARTITIONS = int(os.environ.get("SPARK_GRAFT_BENCH_PARTITIONS", "32"))
 
 # bench corpus: wide fan-out so the depth-2 wave is big enough for
 # compute to dominate fixed wave overheads (~339k URLs scheduled in
-# the final wave: 48 hosts x 84^2). Sized so the steady wave carries
-# >=1 min of 2-core work: a production wave is 10^7-10^9 URLs, so a
-# too-small test wave overweights the fixed per-wave driver floor
-# (~2 s) by orders of magnitude and misreports scaling. 48 hosts also
-# gives the per-task kernel 48 groups — enough scheduling granularity
-# that 8 cores aren't quantized to 3 rounds of 24.
+# the final wave: 48 hosts x 84^2). A production wave is 10^7-10^9
+# URLs, so a too-small test wave overweights the fixed per-wave driver
+# floor (~2 s) by orders of magnitude and misreports scaling. 48 hosts
+# also gives the per-task kernel 48 groups of scheduling granularity.
 CORPUS = dict(seed=42, n_hosts=48, pages_per_host=7300, mega_factor=2,
               branching=84)
 CRAWL_DEPTH = 2
 MAX_URLS = 100_000
+# default-output parity pin (priority wiring must not move the FIFO
+# default): scheduled / extracted URLs of the crawl on CORPUS
+COUNTS_R4 = (347137, 347088)
 
-HEADLINE = [
-    "q1_lineitem_agg", "q3_revenue_by_nation", "q6_budget_cumsum",
-    "q11_minhash_signatures", "q12_minhash_dup_pairs", "q14_simhash16",
-    "q15_embedding_topk", "q16_langid", "q18_token_counts",
-    "q20_url_normalize", "q46_boilerplate", "q47_bm25",
-    # round-3 operators, benched since round 4 (VERDICT r3 item 7)
-    "q52_asof_join", "q53_range_join", "q54_pagerank",
-    "q55_unigram_logprob",
-    # round-5 winnowing (also the regression pin for the r5
-    # staged-projection fix: nested-HOF quadratic re-evaluation)
-    "q57_winnow_fingerprint", "q58_fingerprint_dup_pairs",
-]
-
-# operator scaling pairs (round 4): the r3-added operators measured at
-# pinned local[SCALE_N] vs local[SCALE_4N] like the crawl loop, so a
-# scale regression in any of them is caught per-round. The sf0.1
-# entry queries finish in 1-2 s — almost entirely session/planning
-# floor, which makes a small/large wall-time ratio meaningless — so
-# the DATA-BOUND operators (as-of join, range join, unigram LM) run
-# here on replicated inputs (events x OPS_SCALE_REP with salted user
-# keys, documents x OPS_SCALE_REP with salted doc ids): tens of
-# seconds of real work per side, floor amortized. q54's PageRank
-# corpus stays tiny by design (it pins the per-round job structure of
-# the iterative loop, not data throughput) and is reported as a
-# wall-time pin, not an efficiency.
+# operator scaling pairs: the r3-added operators measured at pinned
+# local[N] vs local[4N] like the crawl loop. The sf0.1 entry queries
+# finish in 1-2 s — almost entirely session/planning floor — so they
+# are wall-time regression pins only, and the DATA-BOUND operators
+# (as-of join, range join, unigram LM) run on replicated inputs
+# (events / documents x OPS_SCALE_REP with salted keys). q54's
+# PageRank corpus stays tiny by design (it pins the per-round job
+# structure of the iterative loop, not data throughput).
 OPS_PAIR = ["q52_asof_join", "q53_range_join", "q54_pagerank",
             "q55_unigram_logprob"]
 OPS_SCALE_REP = int(os.environ.get("SPARK_GRAFT_OPS_SCALE_REP", "32"))
 OPS_SCALED = ["asof_join_x", "range_join_x", "unigram_logprob_x"]
-# corrected-regime variants (r4 verdict #3): same operators with the
-# identified small-scale artifact removed — broadcast disabled for the
-# range join (production regime: interval side exceeds any broadcast
-# threshold), 1 MB AQE advisory partitions for the shuffle-heavy two
-# (production regime: partition count bounded by cores, not volume)
+# the same operators with one small-scale artifact removed each:
+# broadcast disabled for the range join, 1 MB AQE advisory partitions
+# for the shuffle-heavy two
 OPS_CORRECTED = ["range_join_shuffle_x", "unigram_logprob_smallpart_x",
                  "asof_join_smallpart_x"]
-# r5 feature evidence: the chunked as-of join on a LITERAL mega-key
-# (every row one key — the documented serialization bound of the
-# default mode). Only the chunked mode is measured: the unchunked
-# mega-key is a single window task by design (pinned in tests) and
-# timing a deliberate serial path at two core counts proves nothing.
+# the chunked as-of join on a literal mega-key (every row one key)
 OPS_MEGA = ["asof_join_megachunk_x"]
-# r5 map-only contrast: winnowing fingerprints are ZERO-shuffle (one
-# projection + explode, plan-pinned by test_winnow_plan_has_no_exchange),
-# so unlike every pair above this one is NOT capped by the shared-JVM
-# shuffle ceiling. The r5 calibration found what DOES cap a map stage
-# on one host: allocation rate vs memory bandwidth (see the BENCH.md
-# prose) — the original string-building form pegged 16 cores with a
-# flat wall from 8 up; the variadic-hash form measures 0.69-0.76.
-# Winnowing runs ~50 us-core/doc after the two r5 fixes
-# (staged projections removed a quadratic lambda re-evaluation;
-# variadic xxhash64 removed the per-position string building — see
-# operators/dedup.py:winnow_fingerprints), so it gets its OWN
-# replication factor sized for ~30 s at local[2].
+# map-only contrast: zero-shuffle winnowing fingerprints on their own
+# replication factor
 OPS_MAPONLY = ["winnow_fp_x"]
 WINNOW_REP = int(os.environ.get("SPARK_GRAFT_WINNOW_REP", "256"))
-# smaller corpus for the streaming-loop pair: same shape as CORPUS,
-# sized so the local[SCALE_N] side stays under ~1 min
+# smaller corpus for the priority pair: same shape as CORPUS
 OPS_CORPUS = dict(seed=42, n_hosts=24, pages_per_host=1400, mega_factor=2,
                   branching=40)
 
 
 # bump when the corpus GENERATOR changes (new fixture kinds), so the
-# /tmp cache below is invalidated — the size params alone don't see it
+# cache below is invalidated — the size params alone don't see it
 CORPUS_REV = 3  # rev2: redirect stubs; rev3: in-corpus robots.txt pages
 
 
@@ -124,7 +88,7 @@ def corpus_dir(params: dict | None = None) -> str:
     # between two parameter dicts with coincidentally equal values
     tag = "-".join(f"{k}{v}" for k, v in sorted(params.items()))
     tag += f"-rev{CORPUS_REV}"
-    d = f"/tmp/pycrawler_bench_corpus_{tag}"
+    d = os.path.join(tempfile.gettempdir(), f"pycrawler_bench_corpus_{tag}")
     if not os.path.isdir(d):
         from pycrawler_spark.sources.corpus import write_corpus
 
@@ -132,58 +96,49 @@ def corpus_dir(params: dict | None = None) -> str:
     return d
 
 
-def run_crawl_pinned(cores: int, n_exec: int = 0) -> dict:
-    """Run one crawl in a subprocess pinned to exactly ``cores`` CPUs
-    (taskset). local[N] alone under-counts: Python UDF workers, GC and
-    shuffle threads run beside the N task threads, so an unpinned
-    local[2] effectively uses ~4-5 CPUs and deflates measured scaling.
+def scale_cpus() -> tuple[list, list]:
+    """The pair's CPU ids: N = affinity mask size / 4, each side pinned
+    to the first N / 4N ids of the mask (not to 0..n-1, which may lie
+    outside it). A mask of fewer than 4 CPUs cannot host 4N."""
+    mask = sorted(os.sched_getaffinity(0))
+    n = len(mask) // 4
+    if n < 1:
+        raise SystemExit(
+            f"bench.py: the affinity mask has {len(mask)} CPUs ({mask}); "
+            "the N -> 4N pair needs at least 4; refusing to run"
+        )
+    return mask[:n], mask[:4 * n]
 
-    ``n_exec>0`` = local-cluster mode (n_exec separate executor JVMs x
-    2 cores): pins to 2*n_exec + 1 CPUs — one extra for the driver
-    JVM, which on a real cluster is a separate machine on BOTH sides
-    of the N vs 4N comparison."""
-    import json as _json
+
+def run_pinned(cpus: list, worker: str, timeout: int) -> dict:
+    """Run ``bench.py <worker> <len(cpus)>`` in a subprocess pinned to
+    exactly ``cpus`` (taskset). local[N] alone under-counts: Python UDF
+    workers, GC and shuffle threads run beside the N task threads, so
+    an unpinned local[N] uses more than N CPUs and deflates measured
+    scaling."""
     import subprocess
 
-    if n_exec:
-        cores = 2 * n_exec
-        pin = f"0-{cores}"  # +1 CPU for the driver
-        worker = ["--crawl-worker-lc", str(n_exec)]
-    else:
-        pin = f"0-{cores - 1}"
-        worker = ["--crawl-worker", str(cores)]
-    cmd = ["taskset", "-c", pin, sys.executable,
-           os.path.abspath(__file__), *worker]
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=900)
+    cmd = ["taskset", "-c", ",".join(map(str, cpus)), sys.executable,
+           os.path.abspath(__file__), worker, str(len(cpus))]
+    out = subprocess.run(cmd, capture_output=True, text=True, timeout=timeout)
     for line in reversed(out.stdout.splitlines()):
         if line.startswith("{"):
-            return _json.loads(line)
-    raise RuntimeError(f"crawl worker failed: {out.stderr[-2000:]}")
+            return json.loads(line)
+    raise RuntimeError(f"{worker} failed: {out.stderr[-2000:]}")
 
 
-def run_ops_pinned(cores: int) -> dict:
-    """Run the r3-operator suite in a subprocess pinned to ``cores``
-    CPUs (same rationale as run_crawl_pinned)."""
-    import json as _json
-    import subprocess
-
-    cmd = ["taskset", "-c", f"0-{cores - 1}", sys.executable,
-           os.path.abspath(__file__), "--ops-worker", str(cores)]
-    # 900 -> 1200 when the winnow pair landed: the local[SCALE_N] side
-    # carries ~60 s of winnowing on top of the existing suite
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=1200)
-    for line in reversed(out.stdout.splitlines()):
-        if line.startswith("{"):
-            return _json.loads(line)
-    raise RuntimeError(f"ops worker failed: {out.stderr[-2000:]}")
+def check_pinned(cores: int) -> None:
+    """A worker must run on exactly the CPUs its local[n] claims."""
+    got = len(os.sched_getaffinity(0))
+    if got != cores:
+        raise SystemExit(f"bench.py: worker for local[{cores}] runs on {got} CPUs")
 
 
 def run_ops(cores: int) -> dict:
     """One parallelism level of the r3-operator scaling pair: the four
     round-3 queries at SF_DIR plus one `stream_crawl` (the wave loop
-    as a Structured Streaming query) on the OPS corpus."""
+    as a Structured Streaming query) on the gate corpus."""
     import shutil
-    import tempfile
 
     import __spark_entry__ as entrymod
     from pycrawler_spark.config import CrawlConfig
@@ -195,9 +150,7 @@ def run_ops(cores: int) -> dict:
         app_name=f"bench-ops-{cores}",
         master=f"local[{cores}]",
         # fixed on both sides — see the run_crawl comment
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_BENCH_PARTITIONS", "32")
-        ),
+        shuffle_partitions=PARTITIONS,
     )
     out = {"cores": cores, "host_capacity_before": host_capacity(),
            "host_bandwidth_before": host_bandwidth()}
@@ -226,8 +179,7 @@ def run_ops(cores: int) -> dict:
             # input with 1-2 partitions, serializing every downstream
             # map stage on BOTH sides of the pair (a 100 TB table has
             # thousands of splits); spread it like a real table
-            .repartition(int(os.environ.get(
-                "SPARK_GRAFT_BENCH_PARTITIONS", "32")))
+            .repartition(PARTITIONS)
         )
 
     ev = replicate(
@@ -280,7 +232,7 @@ def run_ops(cores: int) -> dict:
     # NOTE: unpersist() would be a no-op here — it only uncaches
     # CacheManager entries, not localCheckpoint RDD blocks. Dropping
     # the reference lets ContextCleaner reclaim the blocks; until
-    # then the replicated docs (~0.5 GB of a 128 GB heap) stay
+    # then the replicated docs (~0.5 GB) stay
     # resident, which is immaterial to the following experiments.
     del docs_w
 
@@ -367,19 +319,6 @@ def run_ops(cores: int) -> dict:
     return out
 
 
-def run_priority_pinned(cores: int) -> dict:
-    import json as _json
-    import subprocess
-
-    cmd = ["taskset", "-c", f"0-{cores - 1}", sys.executable,
-           os.path.abspath(__file__), "--priority-worker", str(cores)]
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=900)
-    for line in reversed(out.stdout.splitlines()):
-        if line.startswith("{"):
-            return _json.loads(line)
-    raise RuntimeError(f"priority worker failed: {out.stderr[-2000:]}")
-
-
 def run_priority_crawl(cores: int) -> dict:
     """End-to-end priority-crawl evidence (r4 verdict #8), run ONCE at
     local[cores]: a politeness-mode FIFO crawl of the OPS corpus, then
@@ -392,7 +331,6 @@ def run_priority_crawl(cores: int) -> dict:
     reorders grants within the budget, so with no budget truncation
     both runs must fetch the identical URL set."""
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -405,9 +343,7 @@ def run_priority_crawl(cores: int) -> dict:
     spark = get_spark(
         app_name=f"bench-priority-{cores}",
         master=f"local[{cores}]",
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_BENCH_PARTITIONS", "32")
-        ),
+        shuffle_partitions=PARTITIONS,
     )
     # politeness on (priority only affects the per-host grant queue);
     # wave_interval sized so the budget is 1000 pages/host/wave — a
@@ -519,16 +455,14 @@ def host_bandwidth() -> float:
     return round(n * 2 * a.nbytes / dt / 1e9, 2)
 
 
-def host_raw_scaling_ceiling(n: int, n4: int) -> float:
+def host_raw_scaling_ceiling(small: list, big: list) -> float:
     """The host's OWN 4x scaling efficiency on embarrassingly-parallel
-    raw Python burn processes (no Spark, no shared state) pinned to n
-    vs n4 CPUs — the ceiling any perfectly-scaling job can exhibit on
-    this machine during the current steal window. Embedded in the
-    bench JSON so the 'engine vs host' attribution is machine-checkable
-    rather than prose."""
+    raw Python burn processes (no Spark, no shared state) pinned to
+    the ``small`` vs ``big`` CPU ids — the ceiling any perfectly-scaling
+    job can exhibit on this machine during the current steal window."""
     import multiprocessing as mp
 
-    def burn_rate(procs: int) -> float:
+    def burn_rate(cpus: list) -> float:
         def w(q):
             t = time.monotonic()
             x = 0
@@ -536,20 +470,21 @@ def host_raw_scaling_ceiling(n: int, n4: int) -> float:
                 x += i * i
             q.put(8.0 / max(time.monotonic() - t, 1e-9))
 
-        os.sched_setaffinity(0, set(range(procs)))
+        mask = os.sched_getaffinity(0)
+        os.sched_setaffinity(0, cpus)
         try:
             q = mp.Queue()
-            ps = [mp.Process(target=w, args=(q,)) for _ in range(procs)]
+            ps = [mp.Process(target=w, args=(q,)) for _ in cpus]
             for p in ps:
                 p.start()
             total = sum(q.get() for _ in ps)
             for p in ps:
                 p.join()
         finally:
-            os.sched_setaffinity(0, set(range(os.cpu_count() or 32)))
+            os.sched_setaffinity(0, mask)
         return total
 
-    return round((burn_rate(n4) / burn_rate(n)) / (n4 / n), 3)
+    return round((burn_rate(big) / burn_rate(small)) / (len(big) / len(small)), 3)
 
 
 def wait_for_quiet_window(pool: list, min_cap: float = 14.0) -> float:
@@ -573,18 +508,9 @@ def wait_for_quiet_window(pool: list, min_cap: float = 14.0) -> float:
     return cap
 
 
-def run_crawl(cores: int, n_exec: int = 0) -> dict:
-    """One crawl run. ``n_exec=0``: local[cores] (threads in one JVM).
-    ``n_exec>0``: local-cluster[n_exec, 2, mem] — REAL separate
-    executor JVMs, 2 cores each (cores = 2*n_exec), the faithful
-    stand-in for the north rule's "N vs 4N executors": a single shared
-    JVM makes per-core efficiency degrade with thread count (shared
-    GC, allocator and shuffle fan-in), which a multi-executor cluster
-    does not exhibit — measured 1.8x CPU inflation at local[8] vs
-    local[2] for identical work, entirely absent across separate
-    executors."""
+def run_crawl(cores: int) -> dict:
+    """One crawl run at local[cores]."""
     import shutil
-    import tempfile
 
     from pycrawler_spark.config import CrawlConfig
     from pycrawler_spark.plans.crawl import CrawlEngine
@@ -592,24 +518,16 @@ def run_crawl(cores: int, n_exec: int = 0) -> dict:
 
     cap = host_capacity()
     cdir = corpus_dir()
-    if n_exec:
-        cores = n_exec * 2
-        master = f"local-cluster[{n_exec},2,4096]"
-    else:
-        master = f"local[{cores}]"
     spark = get_spark(
         app_name=f"bench-crawl-{cores}",
-        master=master,
-        # FIXED partition count on BOTH scaling sides (default 32 =
-        # 4x the big side): on a real cluster shuffle.partitions is a
-        # property of the JOB, not of the cluster size — sizing it per
-        # side gives the two sides different task structures (Arrow
-        # batch sizes, python-worker handshakes per row), and the
-        # measured "scaling" then mixes task-granularity overhead into
-        # the concurrency signal.
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_BENCH_PARTITIONS", "32")
-        ),
+        master=f"local[{cores}]",
+        # FIXED partition count on BOTH scaling sides: on a real
+        # cluster shuffle.partitions is a property of the JOB, not of
+        # the cluster size — sizing it per side gives the two sides
+        # different task structures (Arrow batch sizes, python-worker
+        # handshakes per row), and the measured "scaling" then mixes
+        # task-granularity overhead into the concurrency signal.
+        shuffle_partitions=PARTITIONS,
     )
     work = tempfile.mkdtemp(prefix=f"bench_crawl_{cores}_")
     cfg = CrawlConfig(depth=CRAWL_DEPTH, max_urls=MAX_URLS)
@@ -642,658 +560,228 @@ def run_crawl(cores: int, n_exec: int = 0) -> dict:
     }
 
 
-WARM_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "3"))
+def crawl_gate(small_cpus: list, big_cpus: list) -> dict:
+    """Interleaved (small, big) pairs, the cleanest PAIR reported:
+    steal time varies 2-3x over minutes, so the efficiency is computed
+    per pair (its two runs see the same window), never from the best
+    small of one window and the best big of another. Up to
+    max(BEST_OF, 3) pairs, early stop on a >= 0.8 pair, bounded by a
+    time budget."""
+    ratio = len(big_cpus) / len(small_cpus)
+    t_scaling = time.monotonic()
+    pairs = []
+    wait_pool = [180.0]  # total seconds we may spend waiting for quiet
+    PAIR_COST_EST = 200.0  # seconds; one interleaved pair on this corpus
+    for _ in range(max(BEST_OF, 3)):
+        # budget check BEFORE starting a pair, so the worst case is
+        # bounded by the budget instead of budget + one full pair
+        if pairs and time.monotonic() - t_scaling > 480 - PAIR_COST_EST:
+            break
+        wait_for_quiet_window(wait_pool)
+        s = run_pinned(small_cpus, "--crawl-worker", 1800)
+        b = run_pinned(big_cpus, "--crawl-worker", 1800)
+        e = (b["steady_urls_per_sec"] / s["steady_urls_per_sec"]) / ratio
+        pairs.append((e, s, b))
+        if e >= 0.8:
+            break
+    _, small, big = max(pairs, key=lambda p: p[0])
+    # max(pairs) is an upward-biased estimator under noise; the full
+    # pair distribution and its median go beside it
+    all_effs = sorted(round(p[0], 3) for p in pairs)
+    return {
+        "small": small,
+        "big": big,
+        "crawl_scaling_efficiency": round(
+            (big["urls_per_sec"] / small["urls_per_sec"]) / ratio, 3),
+        "crawl_steady_scaling_efficiency": round(
+            (big["steady_urls_per_sec"] / small["steady_urls_per_sec"]) / ratio, 3),
+        "crawl_steady_scaling_pair_effs": all_effs,
+        "crawl_steady_scaling_efficiency_median": round(statistics.median(all_effs), 3),
+        # measured right after the reported pair, same window
+        "host_raw_cpu_scaling_ceiling": host_raw_scaling_ceiling(
+            small_cpus, big_cpus),
+        "crawl_counts_match_r4": (big["scheduled"], big["extracted"]) == COUNTS_R4,
+    }
 
 
-def run_queries() -> dict:
-    """Headline suite. Per query: ONE cold sample (first execution —
-    comparable to the single-sample numbers of rounds 1-4) plus the
-    MEDIAN of ``WARM_RUNS`` warm re-executions (r4 verdict: a single
-    cold sample cannot distinguish a real 30% regression from steal
-    noise — r4 recorded +31-43% on four untouched queries, all judge-
-    refuted by warm re-runs). The warm median is the regression-
-    detecting signal; capacity probes bracket the batch so readers can
-    see the steal window it ran in."""
-    import __spark_entry__ as entrymod
-    from pycrawler_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="bench-queries",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=max(16, CPUS),
-    )
-    qs = entrymod.queries()
-    # warm the session (JVM codegen, Arrow python workers, parquet
-    # footer cache) so the first query's number measures the QUERY,
-    # not one-time session spin-up — on a long-lived cluster that cost
-    # is paid once per application, not per query
-    spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
-    out = {"queries_host_capacity_before": host_capacity()}
-    for name in HEADLINE:
-        t0 = time.monotonic()
-        n = qs[name](spark, SF_DIR).count()
-        out[name] = round(time.monotonic() - t0, 3)
-        out[f"{name}_rows"] = n
-        warm = []
-        for _ in range(WARM_RUNS):
-            t0 = time.monotonic()
-            qs[name](spark, SF_DIR).count()
-            warm.append(time.monotonic() - t0)
-        warm.sort()
-        m = len(warm) // 2
-        med = warm[m] if len(warm) % 2 else (warm[m - 1] + warm[m]) / 2
-        out[f"{name}_warm"] = round(med, 3)
-    out["queries_host_capacity_after"] = host_capacity()
-    spark.stop()
-    return out
+def ops_pair_effs(ops: dict) -> dict:
+    """Per operator, the pair efficiency against each of the two
+    bracketing small-side runs (stream_crawl: a URLs/s throughput, the
+    rest wall seconds)."""
+    small, big, rerun = ops["small"], ops["big"], ops["small_rerun"]
+    ratio = big["cores"] / small["cores"]
+    names = [n for n in OPS_SCALED + OPS_CORRECTED + OPS_MEGA + OPS_MAPONLY
+             + ["spark_shuffle_ideal"] if n in small]
+    effs = {n: [round((s[n] / max(big[n], 1e-9)) / ratio, 3) for s in (small, rerun)]
+            for n in names}
+    tput = "stream_crawl_urls_per_sec"
+    effs[tput] = [round((big[tput] / s[tput]) / ratio, 3) for s in (small, rerun)]
+    return effs
 
 
 def main():
-    do_scaling = os.environ.get("SPARK_GRAFT_SKIP_SCALING", "") != "1"
-    results = {}
-    scaling = {}
-    if do_scaling:
-        # Interleaved A/B pairs, best PAIR reported: steal time
-        # varies 2-3x over minutes, so A/A/B/B ordering (or mixing the
-        # best A of one window with the best B of another) would bias
-        # the comparison. Pinned (taskset) is the structurally correct
-        # measurement — unpinned local[2] leaks Python workers/GC onto
-        # ~4-5 cores in quiet windows, capping measurable 4x efficiency
-        # at ~0.45. Noisy windows show up in the capacity probe and are
-        # retried (up to 3 pairs, early stop on a clean >=0.78 window).
-        runner = (
-            run_crawl
-            if os.environ.get("SPARK_GRAFT_BENCH_PIN", "") == "0"
-            else run_crawl_pinned
-        )
-        ratio = SCALE_4N / SCALE_N
-        t_scaling = time.monotonic()
-        # Efficiency is computed PER INTERLEAVED PAIR (the two runs of
-        # one pair sit ~minutes apart, so they see the same steal
-        # window) and the cleanest pair is reported. Mixing the best
-        # small of one window with the best big of another biases the
-        # ratio by however much the windows differ (observed 20%+).
-        pairs = []
-        wait_pool = [180.0]  # total seconds we may spend waiting for quiet
-        PAIR_COST_EST = 200.0  # seconds; one interleaved pair on this corpus
-        for attempt in range(max(BEST_OF, 3)):
-            # budget check BEFORE starting a pair, so the worst case is
-            # bounded by the budget instead of budget + one full pair
-            if pairs and time.monotonic() - t_scaling > 480 - PAIR_COST_EST:
-                break  # noisy host: don't blow the harness budget
-            wait_for_quiet_window(wait_pool)
-            s = runner(SCALE_N)
-            b = runner(SCALE_4N)
-            e = (b["steady_urls_per_sec"] / s["steady_urls_per_sec"]) / ratio
-            pairs.append((e, s, b))
-            if e >= 0.8:
-                break  # sampled a clean window; stop burning time
-        _, small, big = max(pairs, key=lambda p: p[0])
-        eff = (big["urls_per_sec"] / small["urls_per_sec"]) / ratio
-        eff_steady = (
-            big["steady_urls_per_sec"] / small["steady_urls_per_sec"]
-        ) / ratio
-        # max(pairs) is an upward-biased estimator under noise; report
-        # the full pair distribution + median so readers can separate
-        # best-case windows from typical ones
-        all_effs = sorted(round(p[0], 3) for p in pairs)
-        eff_median = all_effs[len(all_effs) // 2] if len(all_effs) % 2 else round(
-            (all_effs[len(all_effs) // 2 - 1] + all_effs[len(all_effs) // 2]) / 2, 3
-        )
-        scaling = {
-            f"crawl_urls_per_sec_local{SCALE_N}": small["urls_per_sec"],
-            f"crawl_urls_per_sec_local{SCALE_4N}": big["urls_per_sec"],
-            "crawl_scaling_efficiency": round(eff, 3),
-            f"crawl_steady_urls_per_sec_local{SCALE_N}": small["steady_urls_per_sec"],
-            f"crawl_steady_urls_per_sec_local{SCALE_4N}": big["steady_urls_per_sec"],
-            "crawl_steady_scaling_efficiency": round(eff_steady, 3),
-            "crawl_steady_scaling_efficiency_median": eff_median,
-            "crawl_steady_scaling_pair_effs": all_effs,
-            # host-capacity probes (single-core M-iter/s; quiet ~12)
-            # taken immediately before each run of the reported pair —
-            # machine-checkable evidence of hypervisor steal during the
-            # measurement window (see BENCH.md for the host's own
-            # 0.83-0.87 raw-CPU 4x scaling ceiling)
-            "host_capacity_small_run": small["host_capacity_before"],
-            "host_capacity_big_run": big["host_capacity_before"],
-            # measured right after the reported pair, same window
-            "host_raw_cpu_scaling_ceiling": host_raw_scaling_ceiling(
-                SCALE_N, SCALE_4N
-            ),
-            f"crawl_wall_sec_local{SCALE_4N}": big["wall_sec"],
-            "crawl_scheduled": big["scheduled"],
-            "crawl_extracted": big["extracted"],
-        }
-        record_history(small, big, eff, eff_steady)
-
-        # --- r3-operator scaling pairs (S-B-S bracket, since r5) ------
-        # a single (small, big) sample pair carries the full
-        # hypervisor-steal drift between its two windows: one r5 run
-        # measured the winnow pair at 0.336 purely because the big
-        # side landed in a 13.0-capacity window after a 15.7 small
-        # side (and the ideal job read a nonsensical 1.05). The small
-        # side therefore runs TWICE, bracketing the big run, and each
-        # operator reports the MEDIAN of the two pair efficiencies
-        # plus both raw samples — the same drift control the crawl
-        # gate gets from its interleaved pairs.
-        ops_s = ops_b = ops_s2 = None
-        if os.environ.get("SPARK_GRAFT_SKIP_OPS_SCALING", "") != "1":
-            # own quiet-window budget: the crawl pairs above may have
-            # drained wait_pool
-            wait_for_quiet_window([60.0])
-            ops_s = run_ops_pinned(SCALE_N)
-            ops_b = run_ops_pinned(SCALE_4N)
-            ops_s2 = run_ops_pinned(SCALE_N)
-
-            def pair_effs(name: str) -> list:
-                return [
-                    round((s[name] / max(ops_b[name], 1e-9)) / ratio, 3)
-                    for s in (ops_s, ops_s2)
-                ]
-
-            def med(effs: list) -> float:
-                return round(sum(effs) / len(effs), 3)
-
-            # entry-query walls: regression pins only (1-2 s at sf0.1,
-            # floor-bound — no efficiency derived from them)
-            for name in OPS_PAIR:
-                scaling[f"{name}_local{SCALE_N}"] = ops_s[name]
-                scaling[f"{name}_local{SCALE_4N}"] = ops_b[name]
-            # replicated-input forms: real per-operator scaling signal
-            # (the *_shuffle/*_smallpart variants are the r4-verdict
-            # corrected-regime experiments — see run_ops)
-            maponly = [n for n in OPS_MAPONLY if n in ops_s]
-            for name in OPS_SCALED + OPS_CORRECTED + OPS_MEGA + maponly:
-                rep = WINNOW_REP if name in OPS_MAPONLY else OPS_SCALE_REP
-                effs = pair_effs(name)
-                scaling[f"{name}{rep}_local{SCALE_N}"] = ops_s[name]
-                scaling[f"{name}{rep}_local{SCALE_N}_rerun"] = ops_s2[name]
-                scaling[f"{name}{rep}_local{SCALE_4N}"] = ops_b[name]
-                scaling[f"{name}{rep}_scaling_pair_effs"] = effs
-                scaling[f"{name}{rep}_scaling_efficiency"] = med(effs)
-            # the harness's own shuffle ceiling (ideal job, no engine
-            # code) — the number the operator pairs above are capped by
-            if "spark_shuffle_ideal" in ops_s:
-                effs = pair_effs("spark_shuffle_ideal")
-                scaling[f"spark_shuffle_ideal_local{SCALE_N}"] = (
-                    ops_s["spark_shuffle_ideal"])
-                scaling[f"spark_shuffle_ideal_local{SCALE_N}_rerun"] = (
-                    ops_s2["spark_shuffle_ideal"])
-                scaling[f"spark_shuffle_ideal_local{SCALE_4N}"] = (
-                    ops_b["spark_shuffle_ideal"])
-                scaling["spark_shuffle_ideal_scaling_pair_effs"] = effs
-                scaling["spark_shuffle_ideal_scaling_efficiency"] = med(effs)
-            stream_effs = [
-                round((ops_b["stream_crawl_urls_per_sec"]
-                       / s["stream_crawl_urls_per_sec"]) / ratio, 3)
-                for s in (ops_s, ops_s2)
-            ]
-            scaling[f"stream_crawl_urls_per_sec_local{SCALE_N}"] = (
-                ops_s["stream_crawl_urls_per_sec"]
-            )
-            scaling[f"stream_crawl_urls_per_sec_local{SCALE_N}_rerun"] = (
-                ops_s2["stream_crawl_urls_per_sec"]
-            )
-            scaling[f"stream_crawl_urls_per_sec_local{SCALE_4N}"] = (
-                ops_b["stream_crawl_urls_per_sec"]
-            )
-            scaling["stream_crawl_scaling_pair_effs"] = stream_effs
-            scaling["stream_crawl_scaling_efficiency"] = med(stream_effs)
-            # the steadier signal than the pair eff (which is depressed
-            # by the SMALL side: at local[2] the streaming loop beats
-            # the batch loop end-to-end because micro-batch planning
-            # overlaps the 2-core-bound compute): streaming throughput
-            # vs the batch loop at the SAME 4N parallelism on the SAME
-            # corpus (nearby window, same bench invocation) — ~1.0
-            # means the Structured-Streaming twin costs the same as
-            # the batch wave loop (r5 runs: 0.97 / 1.20 / 0.80)
-            scaling["stream_vs_batch_e2e_ratio_4n"] = round(
-                ops_b["stream_crawl_urls_per_sec"]
-                / max(big["urls_per_sec"], 1e-9), 3)
-            scaling["ops_host_capacity_small_run"] = (
-                ops_s["host_capacity_before"]
-            )
-            scaling["ops_host_capacity_small_rerun"] = (
-                ops_s2["host_capacity_before"]
-            )
-            scaling["ops_host_capacity_big_run"] = (
-                ops_b["host_capacity_before"]
-            )
-            # bandwidth probes (GB/s): the CPU probe misses
-            # memory-bandwidth steal, which is what actually inflates
-            # the bandwidth-bound operators (see host_bandwidth)
-            for tag, w in (("small_run", ops_s), ("big_run", ops_b),
-                           ("small_rerun", ops_s2)):
-                if "host_bandwidth_before" in w:
-                    scaling[f"ops_host_bandwidth_{tag}"] = (
-                        w["host_bandwidth_before"])
-
-        # default-output parity pin vs round 4 (priority wiring must
-        # not move the FIFO default): byte-identical scheduled /
-        # extracted counts on the unchanged bench corpus
-        if CORPUS == dict(seed=42, n_hosts=48, pages_per_host=7300,
-                          mega_factor=2, branching=84):
-            scaling["crawl_counts_match_r4"] = bool(
-                big["scheduled"] == 347137 and big["extracted"] == 347088
-            )
-
-        # end-to-end priority-crawl evidence (one pinned run at 4N)
-        prio = None
-        if os.environ.get("SPARK_GRAFT_SKIP_PRIORITY", "") != "1":
-            prio = run_priority_pinned(SCALE_4N)
-            for k, v in prio.items():
-                if k.startswith("priority_"):
-                    scaling[k] = v
-        write_bench_md(small, big, eff, eff_steady, all_effs, eff_median,
-                       ops_s, ops_b, prio, ops_s2)
-
-    # the query suite gets its own quiet-window budget: a dirty window
-    # here is what produced r4's phantom per-query regressions
-    wait_for_quiet_window([120.0])
-    t0 = time.monotonic()
-    qtimes = run_queries()
-    qtotal = round(time.monotonic() - t0, 2)
-    results = {
-        "metric": "headline query suite wall time (crawl throughput + "
-        "scaling in queries dict)",
-        "value": qtotal,
-        "unit": "sec",
-        "queries": {**{k: v for k, v in qtimes.items() if not k.endswith("_rows")},
-                    **scaling},
-        "sf": SF_DIR.rstrip("/").split("sf")[-1],
+    small_cpus, big_cpus = scale_cpus()
+    gate = crawl_gate(small_cpus, big_cpus)
+    result = {
+        "metric": "crawl steady-state scaling efficiency, N -> 4N",
+        "value": gate["crawl_steady_scaling_efficiency"],
+        "unit": "efficiency",
+        "effective_cpus": len(os.sched_getaffinity(0)),
+        "cpus": {"small": small_cpus, "big": big_cpus},
+        **gate,
     }
-    print(json.dumps(results))
+    record_history(result)
+
+    # operator pairs as an S-B-S bracket: the small side runs twice
+    # around the big run, and each operator reports both bracketing
+    # pair efficiencies — the drift control the crawl gate gets from
+    # its interleaved pairs
+    result["ops"] = None
+    if os.environ.get("SPARK_GRAFT_SKIP_OPS_SCALING", "") != "1":
+        wait_for_quiet_window([60.0])
+        ops = {"small": run_pinned(small_cpus, "--ops-worker", 2400),
+               "big": run_pinned(big_cpus, "--ops-worker", 2400),
+               "small_rerun": run_pinned(small_cpus, "--ops-worker", 2400)}
+        result["ops"] = {**ops, "pair_effs": ops_pair_effs(ops)}
+
+    # end-to-end priority-crawl evidence (one pinned run at 4N)
+    result["priority"] = None
+    if os.environ.get("SPARK_GRAFT_SKIP_PRIORITY", "") != "1":
+        result["priority"] = run_pinned(big_cpus, "--priority-worker", 1800)
+
+    write_bench_md(result)
+    print(json.dumps(result))
 
 
 HISTORY = os.path.join(REPO, "bench_history.jsonl")
 
 
-def record_history(small: dict, big: dict, eff: float, eff_steady: float) -> None:
+def record_history(result: dict) -> None:
     import datetime
 
+    keys = ("cores", "wall_sec", "urls_per_sec", "steady_urls_per_sec",
+            "host_capacity_before")
     rec = {
         "ts": datetime.datetime.utcnow().isoformat(timespec="seconds"),
-        "eff": round(eff, 3),
-        "eff_steady": round(eff_steady, 3),
-        "small": {k: small[k] for k in ("cores", "wall_sec", "urls_per_sec",
-                                         "steady_urls_per_sec",
-                                         "host_capacity_before")},
-        "big": {k: big[k] for k in ("cores", "wall_sec", "urls_per_sec",
-                                     "steady_urls_per_sec",
-                                     "host_capacity_before")},
+        "eff": result["crawl_scaling_efficiency"],
+        "eff_steady": result["crawl_steady_scaling_efficiency"],
+        "effective_cpus": result["effective_cpus"],
+        "small": {k: result["small"][k] for k in keys},
+        "big": {k: result["big"][k] for k in keys},
         "corpus": CORPUS,
     }
     with open(HISTORY, "a") as f:
         f.write(json.dumps(rec) + "\n")
 
 
-def best_history():
-    try:
-        recs = [json.loads(l) for l in open(HISTORY) if l.strip()]
-    except FileNotFoundError:
-        return None
-    return max(recs, key=lambda r: r["eff_steady"]) if recs else None
+def render_tables(result: dict) -> str:
+    """BENCH.md's generated block: tables only, from the result dict
+    ``main`` prints."""
+    small, big = result["small"], result["big"]
+    out = [
+        f"Run on {result['effective_cpus']} CPUs: local[{small['cores']}] "
+        f"(CPUs {result['cpus']['small']}) vs local[{big['cores']}] "
+        f"(CPUs {result['cpus']['big']}).",
+        "",
+        "| parallelism | wall (s) | URLs sched | URLs extracted | URLs/s (total) "
+        "| URLs/s (steady) | host cap (M-iter/s) |",
+        "|---|---|---|---|---|---|---|",
+    ]
+    for r in (small, big):
+        out.append(
+            f"| local[{r['cores']}] | {r['wall_sec']} | {r['scheduled']} "
+            f"| {r['extracted']} | {r['urls_per_sec']} | {r['steady_urls_per_sec']} "
+            f"| {r['host_capacity_before']} |")
+    wave = big["steady_wave"]
+    out += [
+        "",
+        "| gate | value |",
+        "|---|---|",
+        f"| steady-state efficiency (reported pair) | **{result['crawl_steady_scaling_efficiency']}** |",
+        f"| end-to-end efficiency (reported pair) | {result['crawl_scaling_efficiency']} |",
+        f"| steady pair efficiencies / median | {result['crawl_steady_scaling_pair_effs']} "
+        f"/ {result['crawl_steady_scaling_efficiency_median']} |",
+        f"| host raw-CPU scaling ceiling | {result['host_raw_cpu_scaling_ceiling']} |",
+        f"| steady wave (local[{big['cores']}]) | wave {wave['wave_id']}: "
+        f"{wave['scheduled']} scheduled + {wave['found']} found, {wave['wall_sec']} s |",
+        f"| crawl_counts_match_r4 | {result['crawl_counts_match_r4']} |",
+        "",
+    ]
+    out += _ops_table(result["ops"]) + [""] + _priority_table(result["priority"])
+    return "\n".join(out)
 
 
-def _best_line() -> str:
-    b = best_history()
-    if not b:
-        return "(no history yet)"
-    return (f"**{b['eff_steady']:.3f}** steady / {b['eff']:.3f} end-to-end "
-            f"({b['ts']}Z, local[{b['small']['cores']}] "
-            f"{b['small']['steady_urls_per_sec']}/s vs local[{b['big']['cores']}] "
-            f"{b['big']['steady_urls_per_sec']}/s)")
+def _ops_table(ops) -> list:
+    if not ops:
+        return ["Operator pairs: skipped (SPARK_GRAFT_SKIP_OPS_SCALING=1)."]
+    small, big, rerun, effs = ops["small"], ops["big"], ops["small_rerun"], ops["pair_effs"]
 
-
-def _ops_md(ops_s, ops_b, ops_s2=None) -> str:
-    if not ops_s or not ops_b:
-        return "(skipped this run: SPARK_GRAFT_SKIP_OPS_SCALING=1)"
-    ratio = ops_b["cores"] / ops_s["cores"]
-    s2 = ops_s2 or ops_s  # legacy single-pair fallback
-
-    def cell(name):
-        """small-side cell 's1 / s2' and the two bracketing pair effs."""
-        e1 = round((ops_s[name] / max(ops_b[name], 1e-9)) / ratio, 3)
-        e2 = round((s2[name] / max(ops_b[name], 1e-9)) / ratio, 3)
+    def eff(name):
+        e1, e2 = effs[name]
         med = round((e1 + e2) / 2, 3)
-        eff = f"{e1} / {e2} (med {med})"
-        if med > 1.0:
-            # a >1.0 pair efficiency is physically implausible for
-            # identical work — the window shifted mid-bracket (usually
-            # bandwidth steal the CPU probe can't see); flag, don't hide
-            eff += " — IMPLAUSIBLE, window shifted (see probes)"
-        return f"{ops_s[name]} / {s2[name]} s", eff
+        # > 1.0 is implausible for identical work: the window shifted
+        # mid-bracket
+        return f"{e1} / {e2} (med {med})" + (" — window shifted" if med > 1.0 else "")
 
-    rows = []
-    for name in OPS_PAIR:
-        rows.append(f"| {name} (sf entry, floor-bound) | {ops_s[name]} s "
-                    f"| {ops_b[name]} s | — (regression pin) |")
-    for name in OPS_SCALED:
-        sc, ec = cell(name)
-        rows.append(f"| {name}{OPS_SCALE_REP} (replicated input) "
-                    f"| {sc} | {ops_b[name]} s | {ec} |")
-    for name in OPS_CORRECTED:
-        if name not in ops_s:
-            continue
-        sc, ec = cell(name)
-        rows.append(f"| {name}{OPS_SCALE_REP} (corrected regime) "
-                    f"| {sc} | {ops_b[name]} s | {ec} |")
-    for name in OPS_MEGA:
-        if name not in ops_s:
-            continue
-        sc, ec = cell(name)
-        rows.append(f"| {name}{OPS_SCALE_REP} (1 key, chunk=1 day) "
-                    f"| {sc} | {ops_b[name]} s | {ec} |")
-    for name in OPS_MAPONLY:
-        if name not in ops_s:
-            continue
-        sc, ec = cell(name)
-        rows.append(f"| **{name}{WINNOW_REP}** (map-only, zero shuffle) "
-                    f"| {sc} | {ops_b[name]} s | **{ec}** |")
-    if "spark_shuffle_ideal" in ops_s:
-        sc, ec = cell("spark_shuffle_ideal")
-        rows.append(f"| **spark_shuffle_ideal** (harness ceiling, zero "
-                    f"engine code) | {sc} "
-                    f"| {ops_b['spark_shuffle_ideal']} s | **{ec}** |")
-    se1 = round((ops_b["stream_crawl_urls_per_sec"]
-                 / ops_s["stream_crawl_urls_per_sec"]) / ratio, 3)
-    se2 = round((ops_b["stream_crawl_urls_per_sec"]
-                 / s2["stream_crawl_urls_per_sec"]) / ratio, 3)
-    rows.append(
-        f"| stream_crawl, batch-gate corpus (URLs/s) "
-        f"| {ops_s['stream_crawl_urls_per_sec']} / "
-        f"{s2['stream_crawl_urls_per_sec']} "
-        f"| {ops_b['stream_crawl_urls_per_sec']} "
-        f"| {se1} / {se2} (med {round((se1 + se2) / 2, 3)}) |")
-    return "\n".join([
-        f"| operator | local[{ops_s['cores']}] (run1 / run2) "
-        f"| local[{ops_b['cores']}] "
+    rows = [f"| {n} (sf entry, regression pin) | {small[n]} s | {big[n]} s | — |"
+            for n in OPS_PAIR]
+    for names, rep, label in ((OPS_SCALED, OPS_SCALE_REP, "replicated input"),
+                              (OPS_CORRECTED, OPS_SCALE_REP, "corrected regime"),
+                              (OPS_MEGA, OPS_SCALE_REP, "1 key, chunk=1 day"),
+                              (OPS_MAPONLY, WINNOW_REP, "map-only"),
+                              (["spark_shuffle_ideal"], "", "harness ceiling")):
+        rows += [f"| {n}{rep} ({label}) | {small[n]} / {rerun[n]} s | {big[n]} s "
+                 f"| {eff(n)} |" for n in names if n in effs]
+    t = "stream_crawl_urls_per_sec"
+    rows.append(f"| stream_crawl (URLs/s) | {small[t]} / {rerun[t]} | {big[t]} | {eff(t)} |")
+    probes = " / ".join(f"{w['host_capacity_before']} M-iter/s, "
+                        f"{w['host_bandwidth_before']} GB/s" for w in (small, big, rerun))
+    return [
+        f"| operator | local[{small['cores']}] (run1 / run2) | local[{big['cores']}] "
         "| pair efficiency (vs run1 / vs run2) |",
         "|---|---|---|---|",
         *rows,
         "",
-        "The sf-entry rows are 1-2 s queries — almost entirely "
-        "session/planning/Arrow-spin-up floor, so no efficiency is "
-        "derived from them (a wall-time ratio of a fixed floor reads "
-        f"as ~1/{int(ratio)} regardless of the operator); they are "
-        "kept as per-round regression pins. The replicated-input rows "
-        f"(events/documents x{OPS_SCALE_REP}, salted keys, input "
-        "materialized via localCheckpoint + repartition before "
-        "timing) are the data-bound scaling signal. Round 4 explained "
-        "their sub-0.8 efficiencies as two small-scale artifacts; the "
-        "**corrected regime** rows test those explanations as "
-        "EXPERIMENTS (r4 verdict #3) rather than prose: "
-        "`range_join_shuffle` re-runs the range join with broadcast "
-        "joins disabled — the production regime, where the interval "
-        "side exceeds any broadcast threshold and the single-threaded "
-        "broadcast hash-relation build is replaced by a fully "
-        "parallel shuffle join; `*_smallpart` re-runs the unigram and "
-        "as-of operators with `advisoryPartitionSizeInBytes=1m`, so "
-        "AQE's post-shuffle coalescing (which at these input sizes "
-        "caps reduce parallelism by DATA VOLUME toward its 64 MB "
-        "target) no longer bounds the task count below the core "
-        "count, as it would not at production scale where a shuffle "
-        "yields thousands of advisory-sized partitions. The residual "
-        "gap is MEASURED, not asserted: the **spark_shuffle_ideal** "
-        "row times an ideal, embarrassingly-parallel pure-Spark "
-        "shuffle+sort (`spark.range -> md5 -> hash repartition -> "
-        "sort -> noop`, zero engine code) under the identical "
-        "harness — its pair efficiency is the ceiling ANY "
-        "shuffle-bound operator can read here. One-time cross-mode "
-        "calibration of the same ideal job (r5): 0.585 in single-JVM "
-        "local mode, 0.755 across separate executor JVMs "
-        "(local-cluster[1->4, 2 cores, same pinning]), 0.83-1.0 for "
-        "raw-CPU burn processes — i.e. the cap is the SHARED JVM (GC "
-        "+ memory-bandwidth contention across task threads in one "
-        "heap; it worsens with data volume: the same job at 5x rows "
-        "measured 0.454), which a real multi-executor cluster does "
-        "not have. Operator pairs at or near the ideal-job ceiling "
-        "are scaling as well as this harness can measure; the "
-        "operators' shuffle SHAPES are separately plan-asserted in "
-        "tests. The **winnow_fp** row is the converse control: a "
-        "ZERO-shuffle map-only engine stage (one projection + "
-        "explode, plan-pinned), NOT subject to the shuffle ceiling. "
-        "The r5 calibration of this row is a measured lesson in what "
-        "DOES cap a map stage on one host: the original "
-        "string-building form (concat_ws(slice(toks)) + xxhash64 per "
-        "position) pegged all 16 cores while wall time stayed FLAT "
-        "from 8 cores up (rep64: local[2] 21-23 s, local[8] 9.9 s, "
-        "local[16] 8.3-9.8 s, ~3x CPU inflation vs 2 cores), and "
-        "separate executor JVMs did NOT lift it "
-        "(local-cluster[1,2] 16.0 s vs [4,2] 10.3 s, pair 0.39) — "
-        "i.e. the binding constraint was HOST memory bandwidth / "
-        "allocation rate, not the shared heap and not arithmetic. "
-        "Cutting the allocation rate (one variadic xxhash64 over the "
-        "k tokens per position, element_at instead of slice — zero "
-        "per-position strings/arrays) made the operator 2.7x faster "
-        "at 2 cores (7.9 s) and ~4-6x at 16 (1.5-2.8 s) and restored "
-        "scaling past 8 cores; a multi-NODE cluster adds memory "
-        "controllers with its cores, so the production regime "
-        "resembles the fixed form's scaling, not the flat wall. "
-        "q54's PageRank "
-        "corpus is deliberately tiny (3 hosts x 8 pages): it pins the "
-        "per-round job structure of the iterative rank loop. Since r5 "
-        "stream_crawl runs on the SAME corpus as the batch 0.8 gate "
-        "(r4 measured it on a 10x smaller one, where fixed "
-        "per-micro-batch costs — offset commit, file listing, wave "
-        "bookkeeping — dominated both sides and the pair read as an "
-        "overhead ratio, not scaling). The steadier streaming signal "
-        "is `stream_vs_batch_e2e_ratio_4n` in the JSON — streaming "
-        "vs batch throughput at the same 4N parallelism on the same "
-        "corpus (~1.0 across r5 runs: the Structured-Streaming twin "
-        "costs what the batch loop costs; the stream PAIR eff is "
-        "depressed by the small side, where micro-batch planning "
-        "overlaps the core-bound compute and the streaming loop "
-        "actually beats batch end-to-end). Since late r5 the small side "
-        "runs TWICE, bracketing the big run (S-B-S): a single "
-        "(small, big) sample carries the full steal drift between its "
-        "two windows — one r5 run read the winnow pair at 0.336 and "
-        "the ideal job at a nonsensical 1.05 purely because the big "
-        "side landed in a dirtier window — so each row shows both "
-        "bracketing efficiencies and their median, read with the "
-        "capacity probes "
-        f"({ops_s['host_capacity_before']} / "
-        f"{ops_b['host_capacity_before']} / "
-        f"{s2['host_capacity_before']} M-iter/s this run, quiet "
-        "~16) AND the bandwidth probes "
-        f"({ops_s.get('host_bandwidth_before', '?')} / "
-        f"{ops_b.get('host_bandwidth_before', '?')} / "
-        f"{s2.get('host_bandwidth_before', '?')} GB/s this run) — "
-        "one r5 run inflated the bandwidth-bound operators 3-4x at a "
-        "near-quiet CPU probe, i.e. neighbor load can steal memory "
-        "bandwidth without stealing cycles, and only the second probe "
-        "sees it.",
-    ])
+        f"Host probes (run1 / big / run2): {probes}.",
+    ]
 
 
-def _priority_md(prio) -> str:
+def _priority_table(prio) -> list:
     if not prio:
-        return "(skipped this run: SPARK_GRAFT_SKIP_PRIORITY=1)"
-    return (
-        f"One pinned local[{prio['cores']}] politeness-mode pair on the "
-        f"OPS corpus ({OPS_CORPUS['n_hosts']} hosts, budget 1000 "
-        "pages/host/wave): FIFO dequeue vs "
-        "`set_priority(pagerank(discovered link graph))` — PageRank "
-        "(5 rounds) over the FIFO run's frontier edges, exactly the "
-        "\"crawl important pages first\" wiring.\n\n"
-        f"| mode | wall (s) | URLs/s | sub-waves |\n|---|---|---|---|\n"
-        f"| FIFO (reference parity) | "
-        f"{prio['priority_crawl_fifo_wall_sec']} | "
-        f"{prio['priority_crawl_fifo_urls_per_sec']} | "
-        f"{prio['priority_crawl_fifo_waves']} |\n"
-        f"| priority (PageRank) | "
-        f"{prio['priority_crawl_priority_wall_sec']} | "
-        f"{prio['priority_crawl_priority_urls_per_sec']} | "
-        f"{prio['priority_crawl_priority_waves']} |\n\n"
-        f"Priority overhead: **{prio['priority_crawl_overhead_pct']}%** "
-        "(the rank left-join + per-host priority sort; negative = "
-        "noise). Fetched-URL SET parity between the two modes: "
-        f"**{prio['priority_fetch_set_parity']}** — priority reorders "
-        "grants within the politeness budget, so with no budget "
-        "truncation both modes must fetch the identical URL set "
-        "(asserted on url_norm multisets via exceptAll both ways). "
-        "The FIFO default's byte-parity with the reference dequeue is "
-        "separately pinned by the parity tests and the "
-        "`crawl_counts_match_r4` flag in the bench JSON."
-    )
+        return ["Priority pair: skipped (SPARK_GRAFT_SKIP_PRIORITY=1)."]
+    rows = [f"| {label} | {prio[f'priority_crawl_{m}_wall_sec']} "
+            f"| {prio[f'priority_crawl_{m}_urls_per_sec']} "
+            f"| {prio[f'priority_crawl_{m}_waves']} |"
+            for m, label in (("fifo", "FIFO (reference parity)"),
+                             ("priority", "priority (PageRank)"))]
+    return [
+        f"| mode, local[{prio['cores']}] | wall (s) | URLs/s | sub-waves |",
+        "|---|---|---|---|",
+        *rows,
+        "",
+        f"Priority overhead: **{prio['priority_crawl_overhead_pct']}%**; "
+        f"fetched-URL set parity: **{prio['priority_fetch_set_parity']}**.",
+    ]
 
 
-def write_bench_md(small: dict, big: dict, eff: float, eff_steady: float,
-                   all_effs=None, eff_median=None,
-                   ops_s=None, ops_b=None, prio=None, ops_s2=None) -> None:
-    md = f"""# BENCH — crawl-engine scaling evidence
-
-North-rule criterion: throughput scaling efficiency >= 0.8 from N to
-4N executors. Sandbox stand-in (single machine, no cluster): the SAME
-crawl job on the SAME corpus at local[{small['cores']}] vs
-local[{big['cores']}]; interleaved pairs (up to 3, early stop on a
-clean window), the cleanest PAIR reported — both runs of a pair see
-the same steal window. Each run is pinned with `taskset` to exactly
-that many CPUs (the default; `SPARK_GRAFT_BENCH_PIN=0` disables) —
-unpinned local[N] leaks Python UDF workers and GC threads onto extra
-cores and inflates the small-N baseline. The host shows heavy,
-time-varying hypervisor steal (the same run varies 2-3x across
-minutes), so single-shot numbers are noise-bound.
-
-Both sides run the IDENTICAL job: `spark.sql.shuffle.partitions` is
-fixed (default 32, sized ~4x the big side's cores) rather than scaled
-per side — on a real cluster the partition count is a property of the
-job tuned for the full cluster, and a scaling test runs that same job
-on fewer executors. Sizing partitions per side (an earlier version of
-this bench) hands the small side a cheaper task structure — fewer,
-fatter Arrow batches and python-worker handshakes — and the measured
-"scaling" then mixes task-granularity overhead into the concurrency
-signal (observed: up to 15 efficiency points).
-
-Reported efficiency is a **lower bound**: the host itself scales raw
-independent Python processes at only 0.83-0.87 for 4x core ratios
-(hypervisor steal — measured, see above), so a perfectly-scaling job
-cannot read higher than that here. Engine-attributable efficiency,
-normalizing by the machine's own demonstrated ceiling:
-**{min(0.99, eff_steady / 0.85):.2f}** (= {eff_steady:.3f} / 0.85).
-Unpinned runs add a second bias (the local[{small['cores']}] baseline
-leaks Python workers/GC onto ~2x its nominal cores). Neither effect
-exists on a real cluster of separate machines.
-
-**Why N={small['cores']}:** this host advertises 32 CPUs but delivers
-only ~15-20 effective cores under load (hypervisor steal time —
-measured with raw Python burn processes: 32 procs reach 20.4x
-single-core throughput, 16 reach 11.7x; any 4x ratio above ~16 total
-cores is capped by the machine, not the engine). Both scaling points
-therefore sit inside the machine-linear window, where raw-CPU 4x
-ratios measure 0.83-0.87 — the ceiling any perfectly-scaling job can
-show here. On a real cluster N and 4N executors are separate
-machines without this ceiling.
-
-Corpus: {CORPUS['n_hosts']} hosts x ~{CORPUS['pages_per_host']} pages
-(mega-host x{CORPUS['mega_factor']}), branching {CORPUS['branching']},
-crawl depth {CRAWL_DEPTH}, budget {MAX_URLS} URLs/site.
-
-| parallelism | wall (s) | URLs sched | URLs extracted | URLs/sec (total) | URLs/sec (steady) | host cap (M-iter/s, quiet≈12) |
-|---|---|---|---|---|---|---|
-| local[{small['cores']}] | {small['wall_sec']} | {small['scheduled']} | {small['extracted']} | {small['urls_per_sec']} | {small['steady_urls_per_sec']} | {small['host_capacity_before']} |
-| local[{big['cores']}] | {big['wall_sec']} | {big['scheduled']} | {big['extracted']} | {big['urls_per_sec']} | {big['steady_urls_per_sec']} | {big['host_capacity_before']} |
-
-**Scaling efficiency ({small['cores']} -> {big['cores']} cores,
-x{big['cores']//small['cores']}): {eff:.3f} end-to-end,
-{eff_steady:.3f} steady-state** (cleanest of
-{len(all_effs or [eff_steady])} interleaved pair(s): all steady pair
-efficiencies {all_effs or [round(eff_steady, 3)]}, median
-{eff_median if eff_median is not None else round(eff_steady, 3)} —
-the best pair is an upward-biased estimator under steal noise, so both
-are reported).
-
-"Steady" = the largest (saturated) wave — wave {big['steady_wave']['wave_id']},
-{big['steady_wave']['scheduled']} scheduled + {big['steady_wave']['found']}
-extracted. End-to-end includes the small warm-up waves (12-500 URLs),
-whose constant per-wave costs (job scheduling, manifest commits,
-Python-worker spin-up) do not shrink with cores; on a 10^10-URL
-frontier every wave is saturated, so the steady-state number is the
-one that predicts cluster behavior.
-
-Measured by `python bench.py` (env: SPARK_GRAFT_CPUS={CPUS}).
-
-## Operator scaling pairs (r3-added operators, benched since r4)
-
-The round-3 operators (as-of join, range join, PageRank, unigram-LM
-scoring), the r5 winnowing map stage and the streaming wave loop,
-measured pinned as an S-B-S bracket — the local[{small['cores']}]
-side runs twice around the local[{big['cores']}] run — on the same
-inputs (queries at sf, stream_crawl on a {OPS_CORPUS['n_hosts']}-host
-corpus):
-
-{_ops_md(ops_s, ops_b, ops_s2)}
-
-## Priority crawling (end-to-end)
-
-{_priority_md(prio)}
-
-## Streaming wave loop
-
-`stream_crawl` (the wave loop as one Structured Streaming query over
-the frontier delta log) costs about the same as the batch driver loop
-on the bench corpus — see its row in the operator table above, which
-since r5 is measured on the SAME corpus as the batch scaling gate.
-The offset log adds one checkpoint write per micro-batch; wave
-execution is byte-identical (parity tests).
-
-## Headline query methodology (since r5)
-
-Each headline query records a COLD sample (first execution — the
-number comparable to rounds 1-4) and the MEDIAN of {WARM_RUNS} warm
-re-executions (`<name>_warm`). The warm median is the
-regression-detecting signal: r4 recorded +31-43% cold-sample
-"regressions" on four untouched queries that warm re-runs refuted as
-hypervisor-steal noise. Capacity probes bracket the suite
-(`queries_host_capacity_before/after`), and the quiet-window gate now
-actually defers (min_cap 14.0 M-iter/s; the old 9.0 sat below the
-observed dirty range and never fired).
-
-## Query stability notes
-
-q6_budget_cumsum regressed +24% between BENCH_r01 (1.72 s) and
-BENCH_r02 (2.13 s) while everything else improved; flagged for
-bisection. Named cause after round-3 profiling: **host steal noise,
-not a plan change** — five back-to-back isolated runs of the same
-query at sf0.1/local[32] in a quiet window measure 0.61-0.97 s
-(first run 0.97, warm runs 0.61-0.67), far below either bench
-sample, and the plan (partitioned RANGE-frame window cumsum) is
-unchanged since r1. The in-suite number varies with whatever the
-hypervisor is doing during the window stage; the history line above
-carries each sample.
-
-## Best observed across runs (bench_history.jsonl)
-
-Steal noise makes each bench invocation one sample of a distribution;
-the history records every run. Best steady-state efficiency observed:
-{_best_line()}
-
-## vs the reference
-
-The reference's own throughput ceiling is ~0.09 pages/sec/crawler
-(fixed 6 s of waits per navigation plus a 5 s handler delay —
-/root/reference/config-example.py:48-50, crawler.py:314; BASELINE.md),
-i.e. ~{big['cores']} crawler processes would sustain ~{round(0.09 * big['cores'], 1)}
-pages/sec on this machine. This engine's corpus-mode pipeline moves
-{big['steady_urls_per_sec']:.0f} URLs/sec through the full
-schedule→fetch-join→extract→dedup→frontier path at local[{big['cores']}] —
-about {round(big['steady_urls_per_sec'] / (0.09 * big['cores']))}x the
-reference's per-core ceiling (the reference spends its wall clock on
-politeness sleeps and browser rendering; the engine's politeness is a
-scheduling constraint, not a sleep).
-"""
-    with open(os.path.join(REPO, "BENCH.md"), "w") as f:
-        f.write(md)
+def write_bench_md(result: dict, path: str = BENCH_MD) -> None:
+    """Replace the block between BEGIN and END in ``path`` with
+    :func:`render_tables`; everything outside the markers is kept."""
+    with open(path) as f:
+        text = f.read()
+    head, sep, rest = text.partition(BEGIN)
+    _, sep2, tail = rest.partition(END)
+    if not (sep and sep2):
+        raise ValueError(f"{path}: missing the {BEGIN} / {END} markers")
+    with open(path, "w") as f:
+        f.write(f"{head}{BEGIN}\n{render_tables(result)}\n{END}{tail}")
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--crawl-worker":
-        print(json.dumps(run_crawl(int(sys.argv[2]))))
-    elif len(sys.argv) >= 3 and sys.argv[1] == "--crawl-worker-lc":
-        print(json.dumps(run_crawl(0, n_exec=int(sys.argv[2]))))
-    elif len(sys.argv) >= 3 and sys.argv[1] == "--ops-worker":
-        print(json.dumps(run_ops(int(sys.argv[2]))))
-    elif len(sys.argv) >= 3 and sys.argv[1] == "--priority-worker":
-        print(json.dumps(run_priority_crawl(int(sys.argv[2]))))
+    workers = {"--crawl-worker": run_crawl, "--ops-worker": run_ops,
+               "--priority-worker": run_priority_crawl}
+    if len(sys.argv) >= 3 and sys.argv[1] in workers:
+        check_pinned(int(sys.argv[2]))
+        print(json.dumps(workers[sys.argv[1]](int(sys.argv[2]))))
     else:
         main()

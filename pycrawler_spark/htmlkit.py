@@ -34,7 +34,6 @@ _A_HREF_RE = re.compile(
 _META_HTTP_EQUIV_RE = re.compile(
     r"<meta\b[^>]*\bhttp-equiv\s*=[^>]*?/?>", re.I | re.S
 )
-_HTTP_EQUIV_HINT_RE = re.compile(r"http-equiv", re.I)
 
 _FORM_RE = re.compile(
     r"<(form|fieldset)\b[^>]*>.*?</\1\s*>", re.I | re.S
@@ -90,38 +89,14 @@ def _hrefs_from_doc(doc: str) -> List[str]:
 
 # --- X9: meta http-equiv extraction (modules/SaveURL.py:35-38) ----------
 
-# Reference-fidelity path: with bs4 installed at deploy time the tags
-# are re-serialized via BeautifulSoup str(tag) exactly as the
-# reference does (SaveURL.py:36-38) — byte-identical even for exotic
-# HTML the regex path would pass through verbatim. extraction_mode()
-# is recorded in the job manifest so outputs are auditable.
-try:  # pragma: no cover - exercised only where bs4 is installed
-    from bs4 import BeautifulSoup as _BS
-
-    HAVE_BS4 = True
-except Exception:
-    _BS = None
-    HAVE_BS4 = False
-
-
-def extraction_mode() -> str:
-    return "bs4" if HAVE_BS4 else "regex"
-
-
 def extract_meta_http_equiv(html: "bytes | str | None") -> List[str]:
     """All ``<meta http-equiv=...>`` tags, as raw tag strings.
 
     The reference serializes via BeautifulSoup ``str(tag)``
-    (SaveURL.py:36-38); that exact path runs when bs4 is importable.
-    Without bs4 we return the verbatim source tag, which is
+    (SaveURL.py:36-38); we return the verbatim source tag, which is
     byte-stable for our generated corpus (documented divergence for
     arbitrary HTML re-serialization).
     """
-    if HAVE_BS4:
-        soup = _BS(to_text(html) or "", "html.parser")
-        return [
-            str(t) for t in soup.find_all("meta", attrs={"http-equiv": True})
-        ]
     return _meta_from_doc(_strip_nontext(to_text(html)))
 
 
@@ -336,27 +311,11 @@ def page_features(html: "bytes | str | None", with_hrefs: bool = True):
     comment/script strip instead of five (the strip's two whole-doc
     regex subs dominate the per-page cost). ``with_hrefs=False`` skips
     link extraction for waves that collect no links (the final crawl
-    depth — the largest wave of a BFS crawl).
-
-    meta_headers goes through the bs4 re-serialization when the
-    library is present — the SAME path extract_meta_http_equiv takes —
-    so the manifest's recorded ``meta_headers`` extraction mode
-    describes what this (the wave's actual producer) emitted."""
-    raw = to_text(html)
-    doc = _strip_nontext(raw)
-    if HAVE_BS4 and _HTTP_EQUIV_HINT_RE.search(raw or ""):
-        # cheap prefilter over the RAW text (bs4 parses noscript/
-        # template contents that the strip removes — the prefilter
-        # must not hide tags the bs4 path would emit) via a
-        # case-insensitive regex scan: no lowercase copy of the
-        # document on this hot path. Pages without the attribute (the
-        # overwhelming majority) never pay the BeautifulSoup parse.
-        metas = extract_meta_http_equiv(html)
-    else:
-        metas = _meta_from_doc(doc)
+    depth — the largest wave of a BFS crawl)."""
+    doc = _strip_nontext(to_text(html))
     return (
         _text_from_doc(doc),
-        metas,
+        _meta_from_doc(doc),
         _login_from_doc(doc),
         _cookie_from_doc(doc),
         _hrefs_from_doc(doc) if with_hrefs else None,

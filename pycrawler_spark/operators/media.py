@@ -2,12 +2,12 @@
 
 Image/audio/video payloads are opaque ``binary`` columns with typed
 metadata, processed batch-wise via ``mapInPandas`` (Arrow transfer,
-bounded batches — never a row-at-a-time Python UDF). The decode
-kernels themselves are STUBBED behind :data:`REAL_DECODERS` because
-no image/audio library ships in this container; the Spark-side
-contract — schemas, batch shapes, partitioning, null handling — is
-real and tested. Swapping in Pillow/libav later changes only the
-kernel body.
+bounded batches — never a row-at-a-time Python UDF). The real decode
+and resize kernels (``fake=False``) are stubs that raise
+``NotImplementedError``, which surfaces as a per-row error, because no
+image/audio library is a dependency; the Spark-side contract —
+schemas, batch shapes, partitioning, null handling — is real and
+tested. Wiring in Pillow/libav changes only the kernel body.
 
 A deterministic fake decoder (``fake=True``) derives pseudo features
 from the payload bytes so pipelines are testable end-to-end.
@@ -54,31 +54,7 @@ def _fake_decode(payload: bytes, kind: str):
     return w, ht, frames, dur, feat.tolist()
 
 
-try:  # pragma: no cover - exercised only where Pillow is installed
-    from PIL import Image as _PILImage
-
-    HAVE_PILLOW = True
-except Exception:
-    _PILImage = None
-    HAVE_PILLOW = False
-
-
 def _real_decode(payload: bytes, kind: str):
-    """Image decode via Pillow when installed (audio/video still need
-    libav — stubbed). Feature = FEATURE_DIM-bin normalized grayscale
-    histogram: deterministic, library-version-stable."""
-    if kind == "image" and HAVE_PILLOW:
-        import io
-
-        img = _PILImage.open(io.BytesIO(payload))
-        img.load()
-        gray = img.convert("L")
-        hist = np.asarray(gray.histogram(), dtype=np.float64)  # 256 bins
-        binned = hist.reshape(FEATURE_DIM, 256 // FEATURE_DIM).sum(axis=1)
-        total = binned.sum()
-        feat = (binned / total if total else binned).astype(np.float32)
-        n_frames = int(getattr(img, "n_frames", 1))
-        return img.width, img.height, n_frames, 0.0, feat.tolist()
     raise NotImplementedError(
         "real media decode requires Pillow (images) / libav (audio, "
         "video) — wire the library call here (contract: return "
@@ -152,19 +128,6 @@ def resize(
         return min(w0, target_w), min(h0, target_h), payload
 
     def _real_resize(payload: bytes):
-        if HAVE_PILLOW:
-            import io
-
-            img = _PILImage.open(io.BytesIO(payload))
-            img.load()
-            # aspect-preserving fit inside the target box
-            scale = min(target_w / img.width, target_h / img.height, 1.0)
-            w = max(1, int(img.width * scale))
-            h = max(1, int(img.height * scale))
-            out = img.resize((w, h))
-            buf = io.BytesIO()
-            out.save(buf, format=img.format or "PNG")
-            return w, h, buf.getvalue()
         raise NotImplementedError(
             "real image resize requires Pillow — wire it here (contract: "
             "return (new_w, new_h, resized_bytes))"

@@ -35,6 +35,7 @@ from typing import Dict, Iterator, List, Optional, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from pycrawler_spark import psl
 from pycrawler_spark.config import CrawlConfig
 from pycrawler_spark.functions.udfs import (
     host_bucket,
@@ -324,23 +325,20 @@ class CrawlEngine:
         )
         per_depth = self._write_tasks(tasks, frontier0, 0)
         frontier0.unpersist()
-        from pycrawler_spark import htmlkit as _hk, psl as _psl, textkit as _tk
-
         self._save_manifest(
             {
                 "job": self.job,
                 "pages_path": pages_path,
-                # extraction-fidelity provenance: which optional
-                # reference-exact libraries were active for this job's
-                # outputs (byte-identical text invariant audit trail)
+                # extraction-fidelity provenance for this job's outputs
+                # (byte-identical text invariant audit trail)
                 "extraction_modes": {
-                    "tokenize": _tk.tokenize_mode(),
-                    "meta_headers": _hk.extraction_mode(),
-                    "psl": _psl.psl_source(),
+                    "tokenize": "morphy-approx",
+                    "meta_headers": "regex",
+                    "psl": psl.psl_source(),
                     # rule-set md5: a mis-packaged deployment where
                     # executors resolve a different list than the
                     # driver becomes auditable (compare per-process)
-                    "psl_fingerprint": _psl.psl_fingerprint(),
+                    "psl_fingerprint": psl.psl_fingerprint(),
                 },
                 "next_wave": 1,
                 "depth": 0,
@@ -471,18 +469,26 @@ class CrawlEngine:
     def resume(self) -> None:
         """Drop every table directory the manifest does not commit — a
         wave interrupted mid-write, or an interrupted compaction's temp
-        snapshot — then continue from the manifest."""
+        snapshot and superseded deltas — then continue from the
+        manifest. A compaction that moved its table's wave-0 snapshot
+        aside but crashed before its manifest swap is rolled back: the
+        old snapshot returns to ``wave=00000``."""
         m = self._load_manifest()
-        committed = {w["wave_id"] for w in m["waves"]}
         for table in ("tasks", "frontier", "seen", "fetches", "metrics",
                       "requests", "lineage"):
             base = os.path.join(self.workdir, table)
             if not os.path.isdir(base):
                 continue
+            waves = self._committed(m, table)
+            old = os.path.join(base, "_compact_old")
+            # after the swap the table is committed at wave 0 only;
+            # before it, at the >= 2 waves compact() merged
+            if os.path.isdir(old) and waves != [0]:
+                shutil.rmtree(self._dir(table, 0), ignore_errors=True)
+                os.replace(old, self._dir(table, 0))
+            keep = {os.path.basename(self._dir(table, w)) for w in waves}
             for d in os.listdir(base):
-                # a non-wave entry (compact()'s _compact_tmp snapshot)
-                # is never committed either
-                if not d.startswith("wave=") or int(d.split("=")[1]) not in committed:
+                if d not in keep:
                     shutil.rmtree(os.path.join(base, d))
         self.pages_path = m["pages_path"]
 
@@ -1197,8 +1203,12 @@ class CrawlEngine:
         Long crawls accumulate one directory per wave (10^4 waves →
         10^4 file listings per read on a 10^10 frontier); compaction
         restores O(1) read fan-in without changing any table contents.
-        Crash-safe: the snapshot is written to a temp dir first, the
-        manifest swap is the commit point, old deltas are removed last.
+        Crash-safe: the snapshot is written to ``_compact_tmp``, the old
+        wave-0 snapshot is moved aside to ``_compact_old`` (never
+        deleted before the commit), the merged one takes its place, and
+        the manifest swap is the commit point; the old snapshot and
+        deltas are removed last. ``resume()`` rolls an interrupted
+        compaction back or forward by whether the swap happened.
         """
         m = self._load_manifest()
         out: Dict[str, int] = {}
@@ -1233,10 +1243,13 @@ class CrawlEngine:
             writer.parquet(tmp)
             n = self.spark.read.parquet(tmp).count()
             out[table] = n
-            # commit: swap dirs, then rewrite manifest table pointers
+            # swap dirs (old snapshot aside), then commit by rewriting
+            # the manifest's table pointers
             final = self._dir(table, 0)
-            old_dirs = [self._dir(table, w) for w in waves if w != 0]
-            shutil.rmtree(final, ignore_errors=True)
+            old = os.path.join(self.workdir, table, "_compact_old")
+            old_dirs = [old] + [self._dir(table, w) for w in waves if w != 0]
+            if os.path.isdir(final):
+                os.replace(final, old)
             os.replace(tmp, final)
             for w in m["waves"]:
                 if table in w["tables"] and w["wave_id"] != 0:

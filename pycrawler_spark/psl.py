@@ -1,17 +1,16 @@
-"""Public-suffix handling (X2): shipped subset + full-PSL loader.
+"""Public-suffix handling (X2): the vendored full PSL.
 
 The reference resolves eTLD+1 ("fld") via the ``tld`` PyPI package
 (/root/reference/utils.py:37-41, 74-75), which embeds the Mozilla
-Public Suffix List. Since round 4 the FULL list is VENDORED in this
-package (``data/public_suffix_list.dat``, MPL-2.0 public data) and
-auto-loads on import in every process — executors included, because
-they import the package from the py-files zip and the dat is read via
-``importlib.resources``. The compact in-code subset below is only the
-last-resort fallback for a trimmed deployment that dropped package
-data (and the provenance + fingerprint recorded in the job manifest
-make that case auditable). ``PYCRAWLER_PSL_PATH`` still overrides
-with fail-fast semantics for deployments pinning their own list
-(ship it with ``--files`` + ``spark.executorEnv``).
+Public Suffix List. The FULL list is VENDORED in this package
+(``data/public_suffix_list.dat``, MPL-2.0 public data) and loads on
+import in every process — executors included, because they import the
+package from the py-files zip and the dat is read via
+``importlib.resources``. A process that cannot read it fails at
+import instead of computing fld/seen keys from some other rule set.
+``PYCRAWLER_PSL_PATH`` overrides with the same fail-fast semantics for
+deployments pinning their own list (ship it with ``--files`` +
+``spark.executorEnv``).
 
 Matching algorithm (publicsuffix.org spec, same outcome as
 ``tld.get_tld``):
@@ -30,98 +29,23 @@ Matching algorithm (publicsuffix.org spec, same outcome as
 
 from __future__ import annotations
 
+import hashlib
 import os
+from importlib.resources import files
 from typing import Optional
 
-# ICANN gTLDs / ccTLDs + common multi-label suffixes + private suffixes
-# that appear in crawl data. Extend by loading the full PSL.
-SUFFIXES: set[str] = {
-    # generic
-    "com", "org", "net", "edu", "gov", "mil", "int", "info", "biz",
-    "name", "pro", "io", "co", "ai", "app", "dev", "xyz", "site",
-    "online", "shop", "store", "blog", "cloud", "tech", "news", "media",
-    "agency", "travel", "museum", "aero", "jobs", "mobi", "tel", "asia",
-    "cat", "eu",
-    # country codes (ISO 3166 ccTLDs with plain PSL rules; ccTLDs whose
-    # PSL entry is a wildcard rule live in SHIPPED_WILDCARD instead)
-    "de", "fr", "uk", "nl", "it", "es", "pt", "pl", "cz", "sk", "at",
-    "ch", "be", "dk", "se", "no", "fi", "is", "ie", "ru", "ua", "by",
-    "ro", "bg", "gr", "tr", "il", "sa", "ae", "in", "pk", "cn", "jp",
-    "kr", "tw", "hk", "sg", "my", "th", "vn", "id", "ph", "au", "nz",
-    "za", "ng", "ke", "eg", "ma", "br", "ar", "cl", "mx", "pe", "ve",
-    "ca", "us", "cu", "gl", "ly", "me", "tv", "cc", "ws", "to", "fm",
-    "am", "fo", "gg", "im", "je", "li", "lu", "lv", "lt", "ee", "hr",
-    "hu", "si", "rs", "ba", "mk", "al", "md", "ge", "az", "kz", "uz",
-    "ad", "af", "ag", "ai", "ao", "aq", "as", "aw", "ax", "bb", "bf",
-    "bh", "bi", "bj", "bm", "bn", "bo", "bs", "bt", "bw", "bz", "cd",
-    "cf", "cg", "ci", "cm", "cr", "cv", "cw", "cx", "cy", "dj", "dm",
-    "do", "dz", "ec", "et", "fj", "ga", "gd", "gf", "gh", "gi", "gm",
-    "gn", "gp", "gq", "gs", "gt", "gu", "gw", "gy", "hm", "hn", "ht",
-    "iq", "ir", "jo", "kg", "ki", "km", "kn", "kp", "kw", "ky", "la",
-    "lb", "lc", "lk", "lr", "ls", "mc", "mg", "mh", "ml", "mn", "mo",
-    "mp", "mq", "mr", "ms", "mt", "mu", "mv", "mw", "mz", "na", "nc",
-    "ne", "nf", "ni", "nr", "nu", "om", "pa", "pf", "pn", "pr", "ps",
-    "pw", "py", "qa", "re", "rw", "sb", "sc", "sd", "sh", "sj", "sl",
-    "sm", "sn", "so", "sr", "ss", "st", "sv", "sx", "sy", "sz", "tc",
-    "td", "tf", "tg", "tj", "tk", "tl", "tm", "tn", "tt", "ug", "uy",
-    "vc", "vg", "vi", "vu", "wf", "ye", "yt", "zm", "zw",
-    # multi-label (ICANN section)
-    "co.uk", "org.uk", "gov.uk", "ac.uk", "me.uk", "net.uk", "sch.uk",
-    "com.au", "net.au", "org.au", "edu.au", "gov.au",
-    "co.nz", "net.nz", "org.nz",
-    "co.jp", "ne.jp", "or.jp", "ac.jp", "go.jp",
-    "co.kr", "or.kr", "com.cn", "net.cn", "org.cn", "gov.cn",
-    "com.hk", "com.sg", "com.tw", "com.my", "co.th", "co.in", "net.in",
-    "org.in", "com.br", "net.br", "org.br", "com.ar", "com.mx",
-    "com.tr", "com.sa", "co.za", "co.il", "com.eg", "com.ng",
-    "com.pl", "net.pl", "org.pl", "com.ru", "com.ua", "com.de",
-    # private-section suffixes common in crawl corpora
-    "github.io", "gitlab.io", "blogspot.com", "appspot.com",
-    "herokuapp.com", "netlify.app", "vercel.app", "web.app",
-    "firebaseapp.com", "azurewebsites.net", "cloudfront.net",
-    "amazonaws.com", "wordpress.com", "tumblr.com", "fastly.net",
-}
+VENDORED = "package:data/public_suffix_list.dat"
 
-# Wildcard (*.X) and exception (!Y) rules from the PSL's ICANN section
-# for the ccTLDs whose registries delegate at the second level — these
-# change F5 same-site filtering and fld-keyed joins, so the shipped
-# subset must carry them even before a full dat file is loaded.
-SHIPPED_WILDCARD: set[str] = {
-    "bd", "ck", "er", "fk", "jm", "kh", "mm", "np", "pg",
-    "kawasaki.jp", "kitakyushu.jp", "kobe.jp", "nagoya.jp",
-    "sapporo.jp", "sendai.jp", "yokohama.jp",
-}
-SHIPPED_EXCEPTION: set[str] = {
-    "www.ck",
-    "city.kawasaki.jp", "city.kitakyushu.jp", "city.kobe.jp",
-    "city.nagoya.jp", "city.sapporo.jp", "city.sendai.jp",
-    "city.yokohama.jp",
-}
-
-# --- active rule sets (module state; executors rebuild it at import) ----
+# --- active rule sets (module state; every process fills it at import) --
 # _PLAIN: plain rules ("co.uk"); _WILDCARD: base of "*.X" rules (the X);
 # _EXCEPTION: full host form of "!Y" rules (the Y, without the bang).
-_PLAIN: set[str] = set(SUFFIXES)
-_WILDCARD: set[str] = set(SHIPPED_WILDCARD)
-_EXCEPTION: set[str] = set(SHIPPED_EXCEPTION)
-# placeholder; the real bound comes from _rebuild_bounds() below, which
-# accounts for wildcard (+1 label) and exception rules — computing it
-# from _PLAIN alone silently disabled the 3-label shipped rules on
-# freshly imported processes (executors!) until reset_psl() ran
+_PLAIN: set[str] = set()
+_WILDCARD: set[str] = set()
+_EXCEPTION: set[str] = set()
+# longest label count any rule can match: a wildcard rule *.X matches
+# one label more than X has
 _MAX_SUFFIX_LABELS = 1
 _LOADED_FROM: Optional[str] = None
-
-
-def _rebuild_bounds() -> None:
-    global _MAX_SUFFIX_LABELS
-    mx = max((s.count(".") for s in _PLAIN), default=0)
-    # a wildcard rule *.X matches one label more than X has
-    mx = max(mx, max((s.count(".") + 1 for s in _WILDCARD), default=0))
-    mx = max(mx, max((s.count(".") for s in _EXCEPTION), default=0))
-    _MAX_SUFFIX_LABELS = mx + 1
-
-
-_rebuild_bounds()  # every fresh import (executors!) gets the true bound
 
 
 def parse_psl(text: str) -> tuple[set[str], set[str], set[str]]:
@@ -148,102 +72,72 @@ def parse_psl(text: str) -> tuple[set[str], set[str], set[str]]:
     return plain, wild, exc
 
 
-def load_psl(path: Optional[str] = None, ignore_env: bool = False) -> int:
-    """Load a full PSL dat file, REPLACING the shipped subset. Returns
-    the number of rules loaded. With ``path=None`` and no env var,
-    tries the vendored package copy then common system locations;
-    silently keeps the shipped subset when nothing is found
-    (returns 0).
+def _install(text: Optional[str], source: str, origin: str) -> int:
+    """Parse ``text`` and make it the active rule set; a missing
+    (``text=None``) or empty list raises and leaves the state as it
+    was."""
+    global _PLAIN, _WILDCARD, _EXCEPTION, _MAX_SUFFIX_LABELS, _LOADED_FROM
+    plain, wild, exc = parse_psl(text or "")
+    if not plain:
+        raise FileNotFoundError(
+            f"PSL file {source!r} (from {origin}) is missing or empty — "
+            "refusing to resolve fld/seen keys without the full list"
+        )
+    _PLAIN, _WILDCARD, _EXCEPTION = plain, wild, exc
+    _MAX_SUFFIX_LABELS = 1 + max(
+        max(s.count(".") for s in plain),
+        max((s.count(".") + 1 for s in wild), default=0),
+        max((s.count(".") for s in exc), default=0),
+    )
+    _LOADED_FROM = source
+    return len(plain) + len(wild) + len(exc)
 
-    An explicitly-set ``PYCRAWLER_PSL_PATH`` is treated like an
-    explicit ``path`` argument: if that file is missing or unreadable
-    the call RAISES instead of silently keeping the subset. On a
+
+def _load_vendored() -> int:
+    # importlib.resources, NOT a file path: executors import the
+    # package from the py-files ZIP (zipimport), where package data is
+    # a zip member that plain open() cannot reach
+    try:
+        text = (files("pycrawler_spark") / "data" / "public_suffix_list.dat"
+                ).read_text(encoding="utf-8")
+    except OSError:
+        text = None
+    return _install(text, VENDORED, "the package data")
+
+
+def load_psl(path: Optional[str] = None) -> int:
+    """Load a PSL dat file as the active rule set; returns the number
+    of rules. The file is ``path``, else ``PYCRAWLER_PSL_PATH``, else
+    the vendored copy. A missing or empty file RAISES
+    ``FileNotFoundError`` and leaves the active rules untouched. On a
     cluster the env var reaches every executor, so a process where the
     dat file was not shipped (``--files`` forgotten) fails fast at
-    import rather than silently computing fld/seen keys from the
-    subset while the driver uses the full list — a silent per-process
-    dedup-key divergence inside one job.
-
-    ``ignore_env=True`` resolves the default (vendored/system) list
-    even when ``PYCRAWLER_PSL_PATH`` is set — used by the reset hook,
-    which must not re-raise the env fail-fast nor mutate the process
-    environment (popping/restoring the var would race with concurrent
-    threads reading it)."""
-    global _PLAIN, _WILDCARD, _EXCEPTION, _LOADED_FROM
-    env_path = None if ignore_env else os.environ.get("PYCRAWLER_PSL_PATH")
-    explicit = path or env_path
-
-    def _install(plain, wild, exc, source) -> int:
-        global _PLAIN, _WILDCARD, _EXCEPTION, _LOADED_FROM
-        _PLAIN, _WILDCARD, _EXCEPTION = plain, wild, exc
-        _LOADED_FROM = source
-        _rebuild_bounds()
-        return len(plain) + len(wild) + len(exc)
-
+    import rather than silently resolving different dedup keys than
+    the driver."""
+    explicit = path or os.environ.get("PYCRAWLER_PSL_PATH")
     if not explicit:
-        # vendored copy (round 4): the FULL Mozilla list ships inside
-        # the package (data/public_suffix_list.dat, MPL-2.0-licensed
-        # public data, sourced from the OS `publicsuffix` package —
-        # /usr/share/publicsuffix/), so every process that can import
-        # the package resolves the same full rule set with no env
-        # plumbing. Read via importlib.resources, NOT a file path:
-        # executors import the package from the py-files ZIP
-        # (zipimport), where package data is a zip member that plain
-        # open() cannot reach. System paths remain as fallbacks.
-        try:
-            from importlib.resources import files as _res_files
-
-            txt = (
-                _res_files("pycrawler_spark") / "data"
-                / "public_suffix_list.dat"
-            ).read_text(encoding="utf-8")
-            plain, wild, exc = parse_psl(txt)
-            if plain:
-                return _install(
-                    plain, wild, exc, "package:data/public_suffix_list.dat"
-                )
-        except Exception:
-            pass
-    candidates = (
-        [explicit]
-        if explicit
-        else [
-            "/usr/share/publicsuffix/public_suffix_list.dat",
-            "/etc/publicsuffix/public_suffix_list.dat",
-        ]
+        return _load_vendored()
+    text = None
+    if os.path.isfile(explicit):
+        with open(explicit, encoding="utf-8") as f:
+            text = f.read()
+    return _install(
+        text, explicit, "path argument" if path else "PYCRAWLER_PSL_PATH"
     )
-    for p in candidates:
-        if p and os.path.isfile(p):
-            with open(p, encoding="utf-8") as f:
-                plain, wild, exc = parse_psl(f.read())
-            if not plain:
-                continue
-            return _install(plain, wild, exc, p)
-    if explicit:
-        raise FileNotFoundError(
-            f"PSL file {explicit!r} (from "
-            f"{'PYCRAWLER_PSL_PATH' if not path else 'path argument'}) "
-            "is missing or empty — refusing the silent subset fallback; "
-            "ship the dat file (--files) or unset PYCRAWLER_PSL_PATH"
-        )
-    return 0
 
 
 def psl_source() -> str:
-    """Provenance of the active rule set for job manifests/metrics:
-    the loaded dat path, or ``shipped-subset``."""
-    return _LOADED_FROM or "shipped-subset"
+    """Provenance of the active rule set for job manifests: the
+    loaded dat path, or ``package:data/public_suffix_list.dat``."""
+    return _LOADED_FROM
 
 
 def psl_fingerprint() -> str:
     """Deterministic md5 over the active rule sets. Recorded in the
     job manifest next to :func:`psl_source`: if a mis-packaged
     deployment ever makes driver and executors resolve different
-    lists (trimmed zip without package data + divergent system dat),
-    the per-process fingerprints differ and the divergence is
+    lists, the per-process fingerprints differ and the divergence is
     auditable instead of silent."""
-    import hashlib
-
     h = hashlib.md5()
     for tag, rules in (("p", _PLAIN), ("w", _WILDCARD), ("e", _EXCEPTION)):
         h.update(tag.encode())
@@ -254,35 +148,13 @@ def psl_fingerprint() -> str:
 
 
 def reset_psl() -> None:
-    """Restore the import-time DEFAULT rule set (test hook): the
-    vendored/system full list when available, else the shipped
-    subset. Ignores ``PYCRAWLER_PSL_PATH`` — this hook undoes a
-    custom ``load_psl(path)``, it must not re-raise the env fail-fast
-    while a test still has the var monkeypatched — via the
-    ``ignore_env`` flag, NOT by mutating ``os.environ`` (a
-    process-global pop/restore races with any concurrent thread
-    reading the env)."""
-    reset_psl_subset_only()
-    load_psl(ignore_env=True)
+    """Restore the vendored list (test hook that undoes a custom
+    ``load_psl(path)``). Ignores ``PYCRAWLER_PSL_PATH``, so it does not
+    re-raise the env fail-fast while a test still has the var set."""
+    _load_vendored()
 
 
-def reset_psl_subset_only() -> None:
-    """Force the shipped subset regardless of available dat files
-    (test hook for subset-behavior assertions)."""
-    global _PLAIN, _WILDCARD, _EXCEPTION, _LOADED_FROM
-    _PLAIN = set(SUFFIXES)
-    _WILDCARD = set(SHIPPED_WILDCARD)
-    _EXCEPTION = set(SHIPPED_EXCEPTION)
-    _LOADED_FROM = None
-    _rebuild_bounds()
-
-
-# auto-load on import so every process (driver AND executors) picks
-# up the same list: the vendored full dat under data/ loads by
-# default; an explicit PYCRAWLER_PSL_PATH still overrides and still
-# fails fast when its file is missing. The shipped subset survives
-# only where neither the vendored file nor a system copy exists
-# (e.g. a trimmed py-files zip without package data).
+# every process (driver AND executors) loads the same list on import
 load_psl()
 
 

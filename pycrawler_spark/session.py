@@ -43,6 +43,21 @@ def _package_zip() -> str:
     return out
 
 
+def default_master() -> str:
+    """``SPARK_GRAFT_MASTER``, else ``local[n]`` with n =
+    ``SPARK_GRAFT_CPUS`` or the CPUs this process may run on (its
+    affinity mask, not the count the machine advertises)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
+
+
+def default_driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else a quarter of physical RAM (at
+    least 1g), so the driver heap fits the host it runs on."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, ram // 4 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "pycrawler-spark",
     master: str | None = None,
@@ -51,7 +66,7 @@ def get_spark(
     extra_conf: dict | None = None,
     ship_package: bool = True,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or default_master()
     if shuffle_partitions is None:
         # one-ish partition per core locally; on a real cluster pass 2-3x cores
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "8"
@@ -96,7 +111,7 @@ def get_spark(
             "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
             str(256 * 1024 * 1024),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.python.worker.reuse", "true")

@@ -59,36 +59,10 @@ _LANG_STOPWORDS = {
 
 # --- X5: tokenize (utils.py:230-251) ------------------------------------
 
-# Reference-fidelity path: when NLTK (with its wordnet corpus) is
-# importable at deploy time, lemmatization goes through the SAME
-# WordNetLemmatizer the reference uses (utils.py:230-251) and the
-# byte-identical-text invariant holds for tokenized columns too. The
-# shipped fallback is the pinned morphy-rule approximation below.
-# Executors make the same import-time decision as the driver as long
-# as the deployment ships the same site-packages (the normal
-# spark-submit case); tokenize_mode() is recorded in the job manifest
-# so a mixed deployment is visible.
-try:  # pragma: no cover - exercised only where NLTK is installed
-    from nltk.stem import WordNetLemmatizer as _WNL_CLS
-
-    _WNL = _WNL_CLS()
-    _WNL.lemmatize("tests")  # force-load wordnet; raises if corpus absent
-    HAVE_NLTK = True
-except Exception:
-    _WNL = None
-    HAVE_NLTK = False
-
-
-def tokenize_mode() -> str:
-    """Which lemmatizer is active — recorded in job manifests so the
-    extraction-fidelity mode of every output is auditable."""
-    return "nltk-wordnet" if HAVE_NLTK else "morphy-approx"
-
-
 # WordNet-morphy noun detachment rules (NLTK's WordNetLemmatizer with
-# default pos='n'). When NLTK itself is unavailable the rules are
-# applied longest-suffix-first WITHOUT the WordNet vocabulary
-# membership check — a documented deterministic approximation.
+# default pos='n'), applied longest-suffix-first WITHOUT the WordNet
+# vocabulary membership check — a documented deterministic
+# approximation (NLTK is not a dependency).
 _MORPHY_NOUN_RULES = [
     ("ches", "ch"),
     ("shes", "sh"),
@@ -136,10 +110,7 @@ def tokenize(
     result = _WS_RE.sub(" ", pattern.sub(" ", result)).strip()
     words = result.split() if result else []
     if lemma:
-        if HAVE_NLTK:
-            words = [_WNL.lemmatize(w) for w in words]
-        else:
-            words = [lemmatize_noun(w) for w in words]
+        words = [lemmatize_noun(w) for w in words]
     if stop:
         words = [w for w in words if w not in STOPWORDS_EN and len(w) > 1]
     return " ".join(words)

@@ -355,6 +355,70 @@ def test_resume_drops_interrupted_compaction(spark, tmp_path):
     assert {tuple(r) for r in eng2.table("seen").collect()} == before
 
 
+@pytest.mark.parametrize("table", ["seen", "fetches"])
+def test_compaction_crash_windows_resume_to_committed_state(
+    spark, tmp_path, monkeypatch, table
+):
+    """A crash at each step of compact() — before the old wave-0
+    snapshot is moved aside, after it (before the merged snapshot takes
+    its place), and after the swap but before the manifest commit —
+    leaves, after resume(), every table with exactly its pre-compact
+    rows and no uncommitted directory. ``seen`` has a wave-0 snapshot
+    (login-seed injection writes one), ``fetches`` has none."""
+    import os
+    from collections import Counter
+
+    cfg = CrawlConfig(depth=2, max_urls=15, login_seed_injection=True)
+    pages_p, seeds_p, _ = write_corpus(
+        str(tmp_path / "c"), seed=99, n_hosts=3, pages_per_host=8
+    )
+    job = str(tmp_path / "job")
+    eng = CrawlEngine(spark, job, cfg.copy(), job="cc")
+    eng.init_job(spark.read.parquet(seeds_p), pages_p)
+    eng.run()
+
+    def rows(e):
+        # str(row): fetches/frontier rows carry (unhashable) arrays
+        return {t: Counter(map(str, e.table(t).collect()))
+                for t in ("frontier", "seen", "fetches")}
+
+    before = rows(eng)
+    base = os.path.join(job, table)
+    tmp, old = os.path.join(base, "_compact_tmp"), os.path.join(base, "_compact_old")
+    real_replace = os.replace
+
+    class Crash(Exception):
+        pass
+
+    steps = ["aside", "swap", "manifest"]
+    if not os.path.isdir(os.path.join(base, "wave=00000")):
+        steps.remove("aside")
+    for step in steps:
+        swapped = []
+
+        def replace(src, dst, step=step, swapped=swapped):
+            src, dst = str(src), str(dst)
+            if ((step == "aside" and dst == old)
+                    or (step == "swap" and src == tmp)
+                    or (step == "manifest" and swapped)):
+                raise Crash(step)
+            real_replace(src, dst)
+            if src == tmp:
+                swapped.append(True)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(os, "replace", replace)
+            with pytest.raises(Crash):
+                eng.compact(tables=(table,))
+        resumed = CrawlEngine(spark, job, cfg.copy(), job="cc")
+        resumed.resume()
+        assert rows(resumed) == before, step
+        committed = resumed._committed(resumed._load_manifest(), table)
+        assert sorted(os.listdir(base)) == [f"wave={w:05d}" for w in committed], step
+    # the uninterrupted compaction still commits
+    assert table in eng.compact(tables=(table,))
+
+
 def test_manifest_records_extraction_modes(spark, tmp_path):
     from pycrawler_spark.config import CrawlConfig
     from pycrawler_spark.plans.crawl import CrawlEngine
@@ -369,9 +433,14 @@ def test_manifest_records_extraction_modes(spark, tmp_path):
     )
     eng.init_job(spark.read.parquet(seeds_p), pages_p)
     modes = eng._load_manifest()["extraction_modes"]
-    assert modes["tokenize"] in ("nltk-wordnet", "morphy-approx")
-    assert modes["meta_headers"] in ("bs4", "regex")
-    assert modes["psl"]  # shipped-subset or a dat path
+    from pycrawler_spark import psl
+
+    assert modes == {
+        "tokenize": "morphy-approx",
+        "meta_headers": "regex",
+        "psl": "package:data/public_suffix_list.dat",
+        "psl_fingerprint": psl.psl_fingerprint(),
+    }
 
 
 def test_slim_link_struct_matches_full(spark, tmp_path):

@@ -131,19 +131,11 @@ def test_meta_refresh_target():
     assert htmlkit.meta_refresh_target(None, "https://a.com/") is None
 
 
-def test_extraction_mode_matches_bs4_availability():
+def test_meta_http_equiv_returns_verbatim_source_tag():
     from pycrawler_spark import htmlkit
 
-    try:
-        import bs4  # noqa: F401
-
-        have = True
-    except ImportError:
-        have = False
-    assert htmlkit.extraction_mode() == ("bs4" if have else "regex")
-    # both modes agree on well-formed corpus HTML
     tags = htmlkit.extract_meta_http_equiv(
         b'<html><head><meta http-equiv="refresh" content="0;url=/x">'
         b'</head><body></body></html>'
     )
-    assert len(tags) == 1 and "http-equiv" in tags[0]
+    assert tags == ['<meta http-equiv="refresh" content="0;url=/x">']

@@ -174,8 +174,7 @@ def test_load_psl_wildcard_and_exception(tmp_path):
         assert psl.fld("example.de") is None
     finally:
         psl.reset_psl()
-    # import-time default restored (the vendored FULL list since r4;
-    # these behaviors hold under it just as under the old subset)
+    # import-time default (the vendored full list) restored
     assert psl.fld("example.de") == "example.de"
     assert psl.fld("bar.foo.ck") == "bar.foo.ck"
 
@@ -189,6 +188,51 @@ def test_load_psl_missing_path_raises(tmp_path):
         psl.load_psl(str(tmp_path / "nope.dat"))
     # state untouched on failure
     assert psl.fld("example.com") == "example.com"
+
+
+def test_vendored_psl_missing_raises_and_keeps_rules(tmp_path, monkeypatch):
+    """The default load has no fallback: a missing or empty vendored
+    dat raises, leaves the active rules as they were, and a py-files
+    zip without the package data fails at import."""
+    import subprocess
+    import sys as _sys
+    import textwrap
+    import zipfile
+
+    import pytest
+
+    from pycrawler_spark import psl
+    from pycrawler_spark.session import _package_zip
+
+    before = psl.psl_fingerprint()
+    monkeypatch.delenv("PYCRAWLER_PSL_PATH", raising=False)
+    monkeypatch.setattr(psl, "files", lambda pkg: tmp_path)
+    with pytest.raises(FileNotFoundError, match="package data"):
+        psl.load_psl()
+    (tmp_path / "data").mkdir()
+    (tmp_path / "data" / "public_suffix_list.dat").write_text("// empty\n")
+    with pytest.raises(FileNotFoundError, match="missing or empty"):
+        psl.reset_psl()
+    assert psl.psl_fingerprint() == before
+    assert psl.psl_source() == "package:data/public_suffix_list.dat"
+    assert psl.fld("a.pvt.k12.ma.us") == "a.pvt.k12.ma.us"
+
+    # a trimmed py-files zip (code only) fails at import
+    trimmed = tmp_path / "trimmed.zip"
+    with zipfile.ZipFile(_package_zip()) as src, \
+            zipfile.ZipFile(trimmed, "w") as dst:
+        for name in src.namelist():
+            if not name.endswith(".dat"):
+                dst.writestr(name, src.read(name))
+    code = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(trimmed)!r})
+        from pycrawler_spark import psl
+    """)
+    r = subprocess.run([_sys.executable, "-c", code], capture_output=True,
+                       text=True, cwd=str(tmp_path))
+    assert r.returncode != 0
+    assert "FileNotFoundError" in r.stderr
 
 
 def test_url_from_href_fast_path_matches_urljoin():
@@ -303,47 +347,9 @@ def test_normalize_identity_fast_shape_is_exact():
         assert urlkit.normalize_url(u) == u == reference(u)
 
 
-def test_shipped_subset_carries_wildcard_and_exception_rules():
-    """The in-code FALLBACK rule set (what a trimmed deployment
-    without package data resolves) must itself handle the exotic
-    registry shapes: *.ck second-level delegation, the !www.ck
-    carve-out, and the Japanese city wildcard/exception pairs — they
-    change F5 same-site filtering and fld-keyed joins. Since r4 the
-    vendored full list auto-loads on import, so the subset MUST be
-    forced explicitly here or these assertions silently test the full
-    list and the fallback rots unnoticed."""
-    import importlib
-
-    from pycrawler_spark import psl
-
-    # fresh-import first (what an executor process sees) — the import
-    # itself must leave a consistent bound/rule state
-    importlib.reload(psl)
-    # since r4 a fresh import loads the vendored FULL list by default
-    assert psl.psl_source() == "package:data/public_suffix_list.dat"
-    psl.reset_psl_subset_only()
-    try:
-        assert psl.psl_source() == "shipped-subset"
-        assert psl.fld("foo.co.uk") == "foo.co.uk"
-        assert psl.fld("a.b.foo.co.uk") == "foo.co.uk"
-        # *.ck: any <label>.ck is a public suffix...
-        assert psl.public_suffix("x.y.ck") == "y.ck"
-        assert psl.fld("x.y.ck") == "x.y.ck"
-        # ...so a bare two-label ck host is NOT registrable
-        assert psl.fld("y.ck") is None
-        # ...except www.ck, carved back out by the exception rule
-        assert psl.fld("www.ck") == "www.ck"
-        # jp city pairs: *.kawasaki.jp wildcard + !city.kawasaki.jp
-        assert psl.fld("a.b.kawasaki.jp") == "a.b.kawasaki.jp"
-        assert psl.fld("city.kawasaki.jp") == "city.kawasaki.jp"
-    finally:
-        psl.reset_psl()
-    assert psl.psl_source() == "package:data/public_suffix_list.dat"
-
-
 def test_env_psl_path_missing_fails_fast(tmp_path, monkeypatch):
     """An explicitly-set PYCRAWLER_PSL_PATH pointing at a missing file
-    must raise — a process that silently fell back to the subset would
+    must raise — a process that silently fell back to another list would
     compute different fld/seen keys than its peers in the same job."""
     import pytest as _pytest
 
@@ -356,12 +362,11 @@ def test_env_psl_path_missing_fails_fast(tmp_path, monkeypatch):
 
 
 def test_vendored_full_psl_default_and_zip_shipping():
-    """X2 full-fidelity unblocked (r4): the package vendors the FULL
-    Mozilla public_suffix_list.dat (sourced from the OS publicsuffix
-    package) and loads it on import in every process — including
-    executors that import from the py-files zip, where the dat is
-    read via importlib.resources. Spot-checks use rules that exist
-    ONLY in the full list, so the subset cannot fake a pass."""
+    """The package vendors the FULL Mozilla public_suffix_list.dat
+    (sourced from the OS publicsuffix package) and loads it on import
+    in every process — including executors that import from the
+    py-files zip, where the dat is read via importlib.resources."""
+    import importlib
     import subprocess
     import sys as _sys
     import textwrap
@@ -370,20 +375,29 @@ def test_vendored_full_psl_default_and_zip_shipping():
     from pycrawler_spark import psl
     from pycrawler_spark.session import _package_zip
 
+    # fresh import (what an executor process sees)
+    importlib.reload(psl)
     assert psl.psl_source() == "package:data/public_suffix_list.dat"
-    # full-list-only rules (none are in the shipped subset):
     # wildcard *.compute.amazonaws.com, plain pvt.k12.ma.us,
     # plain hokkaido.jp
     assert (psl.fld("x.eu-west-1.compute.amazonaws.com")
             == "x.eu-west-1.compute.amazonaws.com")
     assert psl.fld("a.pvt.k12.ma.us") == "a.pvt.k12.ma.us"
     assert psl.fld("b.hokkaido.jp") == "b.hokkaido.jp"
-    # the subset resolves these differently — proves the dat is live
-    psl.reset_psl_subset_only()
-    try:
-        assert psl.fld("a.pvt.k12.ma.us") == "ma.us"
-    finally:
-        psl.reset_psl()
+    # exotic registry shapes that change F5 same-site filtering and
+    # fld-keyed joins
+    assert psl.fld("foo.co.uk") == "foo.co.uk"
+    assert psl.fld("a.b.foo.co.uk") == "foo.co.uk"
+    # *.ck: any <label>.ck is a public suffix...
+    assert psl.public_suffix("x.y.ck") == "y.ck"
+    assert psl.fld("x.y.ck") == "x.y.ck"
+    # ...so a bare two-label ck host is NOT registrable
+    assert psl.fld("y.ck") is None
+    # ...except www.ck, carved back out by the exception rule
+    assert psl.fld("www.ck") == "www.ck"
+    # jp city pairs: *.kawasaki.jp wildcard + !city.kawasaki.jp
+    assert psl.fld("a.b.kawasaki.jp") == "a.b.kawasaki.jp"
+    assert psl.fld("city.kawasaki.jp") == "city.kawasaki.jp"
 
     # the py-files zip carries the dat and a zip-imported process
     # loads it (the executor path)
